@@ -106,8 +106,9 @@ object Ingest {
     val listed = listSource(spark, source)
     var attempt = 0
     while (true) {
-      val base = Versioned.latestVersion(tableDir)
-      val manifest = base.flatMap(Versioned.readManifest(tableDir, _))
+      val wb = Versioned.writeBase(tableDir)
+      val base = wb.map(_._1)
+      val manifest = wb.map(_._2)
       val meta = manifest.map(_.meta).getOrElse(Map.empty[String, String])
       val loaded: Set[String] =
         if (force) Set.empty

@@ -402,7 +402,7 @@ object TableIO {
 
   /** File-level prune for a SQL condition: intersect the survivors of
     * every recognizable conjunct. None = nothing recognizable or a
-    * legacy/pre-stats layout (caller scans everything, same results). */
+    * pre-protocol/pre-stats layout (caller scans everything, same results). */
   private def prunedByCondition(spark: SparkSession, lh: LakehouseProps,
       tableName: String, condition: String): Option[DataFrame] = {
     val tableDir = Catalog.tablePath(lh, tableName)
@@ -1110,41 +1110,17 @@ object TableIO {
     }
   }
 
-  /** Session conf: target STAGED-COMMIT file size in bytes (0 = off, the
-    * default). At production scale every commit otherwise inherits the
-    * upstream partitioning — e.g. 2000 shuffle partitions → 2000 small
-    * files PER COMMIT (guide §6's small-file problem, unbounded at
-    * 100 TB). When set, staged writes coalesce to
-    * ceil(estimatedBytes / target) output partitions (sized from the
-    * optimizer's estimate — no extra job). OFF by default because file
-    * counts are OBSERVABLE through declared queries (manifest stats,
-    * DESCRIBE DETAIL, row-id spans): enabling it is a deliberate
-    * deployment choice, never a silent local-bench delta. */
-  private[lakehouse] val TargetStagedFileBytesKey =
-    "spark.graft.write.targetStagedFileBytes"
-
   /** Staged parquet write WITH write-task-side per-file stats (guide §1.2:
     * don't pay a second Spark job to recompute what the write tasks already
     * saw). Same writer machinery as `df.write.parquet`, plus a
     * [[WriteStats.Tracker]]. Returns the rendered stats map, or null when
     * the tracker poisoned or missed a staged file — callers then fall back
     * to [[collectFileStats]], so results can never change. */
-  private[lakehouse] def writeStagedWithStats(df0: DataFrame, target: String,
+  private[lakehouse] def writeStagedWithStats(df: DataFrame, target: String,
       partitionBy: Seq[String] = Seq.empty,
       bloomStatCols: Seq[String] = Seq.empty,
       parquetBloomCols: Seq[String] = Seq.empty): Map[String, String] = {
     import org.apache.spark.sql.graftbridge.StatsWriteBridge
-    val tgtBytes = java.lang.Long.parseLong(
-      df0.sparkSession.conf.get(TargetStagedFileBytesKey, "0"))
-    val df =
-      if (tgtBytes <= 0L) df0
-      else {
-        val est = df0.queryExecution.optimizedPlan.stats.sizeInBytes
-        val n = (est / BigInt(tgtBytes)).min(BigInt(Int.MaxValue - 1)).toInt + 1
-        // coalesce never increases partition count — this only merges
-        // small outputs toward the target, it cannot split large ones
-        df0.coalesce(math.max(1, n))
-      }
     val cols = statsColumns(df.schema, exclude = partitionBy.toSet)
     val blooms = bloomStatCols.filter(df.columns.contains)
     val sumCols = sumStatsCols(cols)
@@ -1321,7 +1297,7 @@ object TableIO {
       colName: String): Option[(Option[String], Option[String])] = {
     import org.json4s.{JArray, JNull, JString}
     (j \ colName) match {
-      // [min, max] (older manifests) or [min, max, nullCount]
+      // [min, max, nullCount]
       case JArray(mn :: mx :: _) =>
         def v(x: org.json4s.JValue): Option[String] = x match {
           case JString(str) => Some(str)
@@ -1422,7 +1398,7 @@ object TableIO {
     * if EVERY predicate may match it (ranges intersect per-file — with
     * z-ordered data each extra dimension multiplies the skip rate).
     * Files without recorded stats always survive. Returns None for
-    * legacy/pre-protocol layouts (no per-file stats exist). */
+    * pre-protocol layouts (no per-file stats exist). */
   def pruneFilesRanges(lh: LakehouseProps, tableName: String,
       ranges: Seq[(String, Option[Any], Option[Any])]
       ): Option[(Versioned.ScanFiles, Int)] = {
@@ -1490,7 +1466,7 @@ object TableIO {
     * is always applied, so the result equals the unpruned scan regardless
     * of stats quality (pruning is a pure I/O optimization, exactly Delta's
     * data-skipping contract). Falls back to a full filtered scan for
-    * legacy layouts. */
+    * pre-protocol layouts. */
   def prunedScan(spark: SparkSession, lh: LakehouseProps, tableName: String,
       statCol: String, lo: Option[Any] = None, hi: Option[Any] = None): DataFrame =
     prunedScanRanges(spark, lh, tableName, Seq((statCol, lo, hi)))
@@ -2063,10 +2039,7 @@ object TableIO {
   def setColumnDefault(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, sqlExpr: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName),
       s"default column '$colName' must exist in the schema " +
@@ -2088,7 +2061,7 @@ object TableIO {
     // next append): one constant-folded local projection proves it
     spark.range(1).select(org.apache.spark.sql.functions.expr(stored)).head()
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (DefaultPrefix + colName -> stored), "defaultColumns"),
       op = "SET DEFAULT") { _ => () }
@@ -2100,12 +2073,9 @@ object TableIO {
   def dropColumnDefault(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = m.meta - (DefaultPrefix + colName),
       op = "DROP DEFAULT") { _ => () }
     ()
@@ -2122,10 +2092,7 @@ object TableIO {
   def setGeneratedColumn(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, sqlExpr: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName),
       s"generated column '$colName' must exist in the schema " +
@@ -2146,7 +2113,7 @@ object TableIO {
     enforceChecks(scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries)),
       Map(s"__gen_$colName" -> check), s"$tableName: existing data")
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (GeneratedPrefix + colName -> sqlExpr) +
           (CheckPrefix + s"__gen_$colName" -> check), "generatedColumns"),
@@ -2158,12 +2125,9 @@ object TableIO {
   def dropGeneratedColumn(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = m.meta - (GeneratedPrefix + colName) -
         (CheckPrefix + s"__gen_$colName"),
       op = "DROP GENERATED") { _ => () }
@@ -2226,10 +2190,7 @@ object TableIO {
   def setIdentityColumn(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, startWith: Long = 1): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     require(!m.meta.contains(IdentityPrefix + colName),
       s"$tableName.$colName is already an identity column")
     require(!m.meta.contains(GeneratedPrefix + colName),
@@ -2247,7 +2208,7 @@ object TableIO {
           startWith - 1)
       }
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (IdentityPrefix + colName -> "1") +
           (IdentityMaxPrefix + colName -> wm0.toString), "identityColumns"),
@@ -2276,10 +2237,7 @@ object TableIO {
   def enableRowTracking(spark: SparkSession, lh: LakehouseProps,
       tableName: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     require(!m.meta.contains(Versioned.RowTrackingKey),
       s"$tableName already has row tracking enabled")
     var wm = 0L
@@ -2293,7 +2251,7 @@ object TableIO {
       e2
     }
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = backfilled,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (Versioned.RowTrackingKey -> "1") +
           (Versioned.RowIdMaxKey -> wm.toString), "rowTracking"),
@@ -2352,17 +2310,14 @@ object TableIO {
     require(name.nonEmpty && !name.contains("=") && !name.contains("\n"),
       "constraint names must be single-line and '='-free")
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry constraints"))
+    val (b, m) = existingBase(tableDir, tableName)
     require(!m.meta.contains(CheckPrefix + name),
       s"$tableName already has a CHECK constraint named '$name' — drop it " +
         "first (silent replacement would change enforcement unnoticed)")
     enforceChecks(scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries)),
       Map(name -> sqlExpr), s"$tableName: existing data")
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (CheckPrefix + name -> sqlExpr), "checkConstraints"),
       op = "ADD CONSTRAINT") {
@@ -2376,11 +2331,9 @@ object TableIO {
   def dropCheckConstraint(spark: SparkSession, lh: LakehouseProps,
       tableName: String, name: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(s"$tableName has no versions"))
+    val (b, m) = existingBase(tableDir, tableName)
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = m.meta - (CheckPrefix + name),
+      expectedBase = Some(b), meta = m.meta - (CheckPrefix + name),
       op = "DROP CONSTRAINT") { _ => () }
     ()
   }
@@ -2474,10 +2427,7 @@ object TableIO {
     require(cols.nonEmpty && cols.forall(c => !c.contains(",")),
       "UNIQUE needs at least one comma-free column name")
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry constraints"))
+    val (b, m) = existingBase(tableDir, tableName)
     require(!m.meta.contains(UniquePrefix + name),
       s"$tableName already has a UNIQUE constraint named '$name' — drop " +
         "it first (silent replacement would change enforcement unnoticed)")
@@ -2489,7 +2439,7 @@ object TableIO {
         .select(cols.map(org.apache.spark.sql.functions.col): _*),
       Map(name -> cols), s"$tableName: existing data")
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (UniquePrefix + name -> cols.mkString(",")),
         "uniqueConstraints"),
@@ -2501,11 +2451,9 @@ object TableIO {
   def dropUniqueConstraint(spark: SparkSession, lh: LakehouseProps,
       tableName: String, name: String): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(s"$tableName has no versions"))
+    val (b, m) = existingBase(tableDir, tableName)
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = m.meta - (UniquePrefix + name),
+      expectedBase = Some(b), meta = m.meta - (UniquePrefix + name),
       op = "DROP CONSTRAINT") { _ => () }
     ()
   }
@@ -2545,10 +2493,7 @@ object TableIO {
       .forall(v => !v.contains(",") && !v.contains(";")),
       "FK identifiers must be ','/';'-free")
     val tableDir = Catalog.tablePath(lh, childTable)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$childTable needs a manifest-based version to carry constraints"))
+    val (b, m) = existingBase(tableDir, childTable)
     require(!m.meta.contains(FkPrefix + name),
       s"$childTable already has a FOREIGN KEY named '$name'")
     if (validate) {
@@ -2559,7 +2504,7 @@ object TableIO {
           s"orphan: ${bad.headOption}")
     }
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base,
+      expectedBase = Some(b),
       meta = m.meta + (FkPrefix + name ->
         s"${childCols.mkString(",")};$parentTable;${parentCols.mkString(",")}"),
       op = "ADD CONSTRAINT") { _ => () }
@@ -2570,11 +2515,9 @@ object TableIO {
   def dropForeignKey(spark: SparkSession, lh: LakehouseProps,
       childTable: String, name: String): Unit = {
     val tableDir = Catalog.tablePath(lh, childTable)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(s"$childTable has no versions"))
+    val (b, m) = existingBase(tableDir, childTable)
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = m.meta - (FkPrefix + name),
+      expectedBase = Some(b), meta = m.meta - (FkPrefix + name),
       op = "DROP CONSTRAINT") { _ => () }
     ()
   }
@@ -2746,11 +2689,14 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     var attempt = 0
     while (true) {
-      (pinBase match {
-        case Some(0L) => None
-        case Some(v) => Some(v)
-        case None => Versioned.latestVersion(tableDir)
-      }) match {
+      val base = pinBase.filter(_ > 0) match {
+        case Some(v) => Some(v -> Versioned.committedManifest(tableDir, v))
+        case None => Versioned.writeBase(tableDir)
+      }
+      // a caller that saw no table (pin 0) but finds one conflicts at the
+      // commit's base check — never a silent append onto the newcomer
+      val expected = pinBase.orElse(base.map(_._1)).getOrElse(0L)
+      base match {
         case None =>
           // table creation pinned to base 0: two concurrent first appends
           // race the claim of v1 — the loser gets ConcurrentWriteException
@@ -2772,88 +2718,76 @@ object TableIO {
               attempt += 1
               if (pinBase.isDefined || attempt > maxRetries) throw e
           }
-        case Some(base) =>
-          Versioned.readManifest(tableDir, base) match {
-            case Some(m) =>
-              // generated columns (Delta generated-column semantics):
-              // absent in the batch -> computed here; present -> the
-              // paired CHECK constraint validates it below. Identity
-              // columns assign above the recorded watermark, which
-              // advances IN this commit (a lost race retries the whole
-              // block against the fresh manifest, re-reading both).
-              val dfg = withGeneratedColumns(
-                withDefaultColumns(df, m.meta), m.meta)
-              val (dfi, idMeta, pin) =
-                withIdentityAssigned(dfg, m.meta, s"$tableName: append")
-              try {
-                enforceChecks(dfi, checkConstraintsOf(m.meta), s"$tableName: append")
-                val uniques = uniqueConstraintsOf(m.meta)
-                enforceUniqueWithin(dfi, uniques, s"$tableName: append")
-                enforceUniqueAgainst(spark, tableDir, m, dfi, uniques,
-                  s"$tableName: append")
-                val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-                val oldEmpty = spark.createDataFrame(
-                  spark.sparkContext.emptyRDD[Row], oldSchema)
-                // evolved schema = old ∪ new (by name); old columns keep
-                // their positions, brand-new ones append as nullable
-                val evolved = oldEmpty
-                  .unionByName(dfi.limit(0), allowMissingColumns = true).schema
-                val aligned = oldEmpty.unionByName(dfi, allowMissingColumns = true)
-                val parts = currentPartitioning(lh, tableName)
-                try {
-                  val evolvedM = alignMapping(evolved, oldSchema, m.meta, base)
-                  val sw = new StagedWrite(spark, bloomColsOf(m))
-                  val commit = Versioned.commitFiles(tableDir, evolvedM.json,
-                    inherit = m.entries, expectedBase = Some(base),
-                    collectStats = sw.collect,
-                    meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND") { target =>
-                    sw.write(toPhysical(aligned, evolvedM), target,
-                      partitionBy = parts)
-                  }
-                  return finishCommit(spark, lh, tableName, tableDir, commit,
-                    evolvedM.fieldNames.toSeq, parts)
-                } catch {
-                  case e: Versioned.ConcurrentWriteException =>
-                    attempt += 1
-                    if (pinBase.isDefined || attempt > maxRetries) throw e
-                }
-              } finally pin.foreach(_.unpersist())
-            case None =>
-              // legacy snapshot version: append = full rewrite once; the
-              // table is manifest-based from then on
-              val current = selectTable(spark, lh, tableName)
-              return writeTable(spark, lh, tableName,
-                current.unionByName(df, allowMissingColumns = true),
-                partitionBy = currentPartitioning(lh, tableName),
-                extraMeta = extraMeta)
-          }
+        case Some((b, m)) =>
+          // generated columns (Delta generated-column semantics): absent in
+          // the batch -> computed here; present -> the paired CHECK
+          // constraint validates it below. Identity columns assign above
+          // the recorded watermark, which advances IN this commit (a lost
+          // race retries the whole block against the fresh manifest,
+          // re-reading both).
+          val dfg = withGeneratedColumns(withDefaultColumns(df, m.meta), m.meta)
+          val (dfi, idMeta, pin) =
+            withIdentityAssigned(dfg, m.meta, s"$tableName: append")
+          try {
+            enforceChecks(dfi, checkConstraintsOf(m.meta), s"$tableName: append")
+            val uniques = uniqueConstraintsOf(m.meta)
+            enforceUniqueWithin(dfi, uniques, s"$tableName: append")
+            enforceUniqueAgainst(spark, tableDir, m, dfi, uniques,
+              s"$tableName: append")
+            val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+            val oldEmpty = spark.createDataFrame(
+              spark.sparkContext.emptyRDD[Row], oldSchema)
+            // evolved schema = old ∪ new (by name); old columns keep their
+            // positions, brand-new ones append as nullable
+            val evolved = oldEmpty
+              .unionByName(dfi.limit(0), allowMissingColumns = true).schema
+            val aligned = oldEmpty.unionByName(dfi, allowMissingColumns = true)
+            val parts = partitionSpecOf(m.meta, m.files)
+            try {
+              val evolvedM = alignMapping(evolved, oldSchema, m.meta, b)
+              val sw = new StagedWrite(spark, bloomColsOf(m))
+              val commit = Versioned.commitFiles(tableDir, evolvedM.json,
+                inherit = m.entries, expectedBase = Some(expected),
+                collectStats = sw.collect,
+                meta = m.meta ++ extraMeta ++ idMeta, op = "APPEND") { target =>
+                sw.write(toPhysical(aligned, evolvedM), target,
+                  partitionBy = parts)
+              }
+              return finishCommit(spark, lh, tableName, tableDir, commit,
+                evolvedM.fieldNames.toSeq, parts)
+            } catch {
+              case e: Versioned.ConcurrentWriteException =>
+                attempt += 1
+                if (pinBase.isDefined || attempt > maxRetries) throw e
+            }
+          } finally pin.foreach(_.unpersist())
       }
     }
     throw new IllegalStateException("unreachable")
   }
 
+  /** The base of a writer that needs an existing table: the one rule of
+    * [[Versioned.writeBase]], with a missing table failing loudly. */
+  private[lakehouse] def existingBase(tableDir: String,
+      tableName: String): (Long, Versioned.Manifest) =
+    Versioned.writeBase(tableDir).getOrElse(
+      throw new IllegalArgumentException(s"$tableName has no versions"))
+
   private def finishCommit(spark: SparkSession, lh: LakehouseProps,
       tableName: String, tableDir: String, commit: Versioned.Commit,
       columns: Seq[String], partitionBy: Seq[String]): TableInfo = {
-    val written = scanSpec(spark, Versioned.specFor(tableDir, commit.version))
+    val m = Versioned.committedManifest(tableDir, commit.version)
+    val written = scanSpec(spark, Versioned.scanOf(tableDir, m, m.entries))
     // O(0) in the steady state: the manifest's per-file row counts sum to
     // the total — an O(files-in-table) count() per commit would make every
     // tiny append pay for the whole table's footers
-    val rowCount = Versioned.readManifest(tableDir, commit.version)
-      .flatMap(rowsFromManifest)
-      .getOrElse(written.count())
+    val rowCount = rowsFromManifest(m).getOrElse(written.count())
     val info = TableInfo(lh.lakehouseName, rowCount, columns.length,
       columns, tableDir, partitionBy)
     Catalog.recordTable(tableName, written, info)
     info
   }
 
-  /** The Hive partitioning of `tableName`'s current version. Manifest
-    * versions derive it from their file paths (`col=value` segments);
-    * legacy/pre-protocol layouts fall back to a directory walk. The on-disk
-    * layout is the source of truth — a session registry keyed by bare table
-    * name would be blind in a fresh JVM and collide across lakehouses.
-    * Maintenance rewrites (compact, merge, append) must preserve this. */
   /** col1=v/col2=v/part-*.parquet -> Seq(col1, col2). A shallow clone's
     * absolute entries carry a foreign pool prefix before the partition
     * segments — skipped, not matched. */
@@ -2867,6 +2801,11 @@ object TableIO {
     * (layout then derives from the files, as before). */
   private val PartitionByKey = "graft.partitionBy"
 
+  /** The Hive partitioning of a version: its recorded spec, else derived
+    * from its file paths (`col=value` segments). The on-disk layout is the
+    * source of truth — a session registry keyed by bare table name would be
+    * blind in a fresh JVM and collide across lakehouses. Maintenance
+    * rewrites (compact, merge, append) must preserve this. */
   private[lakehouse] def partitionSpecOf(meta: Map[String, String],
       files: Seq[String]): Seq[String] =
     meta.get(PartitionByKey) match {
@@ -2875,37 +2814,9 @@ object TableIO {
       case None => partitioningOfFiles(files)
     }
 
-  private def currentPartitioning(lh: LakehouseProps, tableName: String): Seq[String] = {
-    val tableDir = Catalog.tablePath(lh, tableName)
-    Versioned.latestVersion(tableDir)
-      .flatMap(v => Versioned.readManifest(tableDir, v))
-      .foreach(m => return partitionSpecOf(m.meta, m.files))
-    Versioned.readSpec(tableDir) match {
-      case Versioned.ScanFiles(_, _, files, _) => partitioningOfFiles(files)
-      case Versioned.ScanDir(dataDir) =>
-        val out = Seq.newBuilder[String]
-        var dir = Paths.get(dataDir)
-        var descend = true
-        while (descend && Files.isDirectory(dir)) {
-          val s = Files.list(dir)
-          val level =
-            try s.iterator().asScala.toSeq
-              .filter(p => Files.isDirectory(p) &&
-                p.getFileName.toString.matches("[^=]+=.*"))
-            finally s.close()
-          level.headOption match {
-            case Some(d) =>
-              out += d.getFileName.toString.split("=", 2)(0)
-              dir = d
-            case None => descend = false
-          }
-        }
-        out.result()
-    }
-  }
-
   /** Absolute paths of the data files backing `tableName`'s current
-    * version (manifest file list, or a recursive walk for legacy layouts). */
+    * version (manifest file list, or a recursive walk of a pre-protocol
+    * directory). */
   def currentFiles(lh: LakehouseProps, tableName: String): Seq[Path] =
     Versioned.readSpec(Catalog.tablePath(lh, tableName)) match {
       case Versioned.ScanFiles(base, _, files, _) =>
@@ -2955,11 +2866,9 @@ object TableIO {
     // O(updates) validation jobs below: mergeInto preserves target ids on
     // update and engine-assigns them on insert.
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val baseManifest = base.flatMap(Versioned.readManifest(tableDir, _))
+    val (b, m) = existingBase(tableDir, tableName)
     locally {
-      val idDecl = baseManifest.map(m => identityColsOf(m.meta))
-        .getOrElse(Seq.empty)
+      val idDecl = identityColsOf(m.meta)
       require(idDecl.isEmpty,
         s"$tableName has GENERATED ALWAYS AS IDENTITY column(s) " +
           s"${idDecl.mkString(", ")} — whole-row mergeTable would take ids " +
@@ -3004,112 +2913,101 @@ object TableIO {
         None
       }
     }
-    try (base, baseManifest) match {
-      case (Some(_), Some(m)) if !cdfEnabled(m.meta) =>
+    try {
+      if (!cdfEnabled(m.meta))
         // without a change feed to stage, MERGE is exactly the generalized
         // replace primitive with removal keys = update keys
         // removal keys from the validated key frame when available: the
         // internal distinct then folds a cached key set, not the raw
         // updates plan
-        replaceKeyedRows(spark, lh, tableName,
+        return replaceKeyedRows(spark, lh, tableName,
           groupedShared.map(_.select(keyColumns: _*)).getOrElse(updates),
           updates, keyCols, extraMeta = extraMeta, op = "MERGE")
-      case (Some(b), Some(m)) =>
-        enforceChecks(updates, checkConstraintsOf(m.meta), s"$tableName: merge")
-        val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        // the validation aggregation above already materialized the
-        // distinct key set — reuse it instead of re-aggregating `updates`
-        val updKeys = groupedShared.map(_.select(keyColumns: _*)).getOrElse(
-          updates.select(keyColumns: _*).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        try {
-          // 1. affected files: key-columns-only columnar scan + semi join —
-          // reads keyCols bytes of the table, not the table. (The empty-
-          // manifest scan has no _metadata column — and no files to match.)
-          import org.apache.spark.sql.functions.col
-          val affectedPaths =
-            if (m.entries.isEmpty) Set.empty[String]
-            else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
-              keepMeta = true)
-              .select(keyColumns :+ col(FpCol).as("__fp"): _*)
+      enforceChecks(updates, checkConstraintsOf(m.meta), s"$tableName: merge")
+      val oldSchema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+      // the validation aggregation above already materialized the
+      // distinct key set — reuse it instead of re-aggregating `updates`
+      val updKeys = groupedShared.map(_.select(keyColumns: _*)).getOrElse(
+        updates.select(keyColumns: _*).distinct()
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      try {
+        // 1. affected files: key-columns-only columnar scan + semi join —
+        // reads keyCols bytes of the table, not the table. (The empty-
+        // manifest scan has no _metadata column — and no files to match.)
+        import org.apache.spark.sql.functions.col
+        val affectedPaths =
+          if (m.entries.isEmpty) Set.empty[String]
+          else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+            keepMeta = true)
+            .select(keyColumns :+ col(FpCol).as("__fp"): _*)
+            .join(updKeys, keyCols, "left_semi")
+            .select("__fp").distinct()
+            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+        val baseP = Paths.get(tableDir)
+        val (affected, untouched) = m.entries.partition(e =>
+          affectedPaths.contains(baseP.resolve(e.path).toString))
+        // 2. rewrite ONLY the affected files; inherit the rest
+        val affectedRaw =
+          if (affected.isEmpty)
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
+          else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
+        // with CDF the affected files feed THREE plans (rewrite, preimage,
+        // key set) — persist for the commit instead of re-scanning
+        val affectedDf =
+          if (cdfEnabled(m.meta) && affected.nonEmpty)
+            affectedRaw.persist(
+              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else affectedRaw
+        val kept = affectedDf.join(updKeys, keyCols, "left_anti")
+        val rewritten = kept.unionByName(updates, allowMissingColumns = true)
+        val parts = partitionSpecOf(m.meta, m.files)
+        // change data feed: matched rows emit pre+post images, new keys
+        // emit inserts; staged atomically with the commit (beforeMarker).
+        // Post/insert rows come from the STAGED (committed) files, never
+        // a re-evaluation of the caller's `updates` plan — staged rows
+        // whose key is in updKeys are exactly the update rows as written
+        // (kept rows were anti-joined out)
+        val writeCdf: (Long, Seq[Versioned.FileEntry], String) => Unit =
+          if (!cdfEnabled(m.meta)) (_, _, _) => ()
+          else (v, staged, cid) => {
+            import org.apache.spark.sql.functions.{lit, when}
+            val oldKeys = affectedDf.select(keyColumns: _*).distinct()
+            val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
+              alignMapping(rewritten.schema, oldSchema, m.meta, b).json,
+              staged.map(_.path)))
               .join(updKeys, keyCols, "left_semi")
-              .select("__fp").distinct()
-              .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-          val baseP = Paths.get(tableDir)
-          val (affected, untouched) = m.entries.partition(e =>
-            affectedPaths.contains(baseP.resolve(e.path).toString))
-          // 2. rewrite ONLY the affected files; inherit the rest
-          val affectedRaw =
-            if (affected.isEmpty)
-              spark.createDataFrame(spark.sparkContext.emptyRDD[Row], oldSchema)
-            else scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-          // with CDF the affected files feed THREE plans (rewrite, preimage,
-          // key set) — persist for the commit instead of re-scanning
-          val affectedDf =
-            if (cdfEnabled(m.meta) && affected.nonEmpty)
-              affectedRaw.persist(
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            else affectedRaw
-          val kept = affectedDf.join(updKeys, keyCols, "left_anti")
-          val rewritten = kept.unionByName(updates, allowMissingColumns = true)
-          val parts = currentPartitioning(lh, tableName)
-          // change data feed: matched rows emit pre+post images, new keys
-          // emit inserts; staged atomically with the commit (beforeMarker).
-          // Post/insert rows come from the STAGED (committed) files, never
-          // a re-evaluation of the caller's `updates` plan — staged rows
-          // whose key is in updKeys are exactly the update rows as written
-          // (kept rows were anti-joined out)
-          val writeCdf: (Long, Seq[Versioned.FileEntry], String) => Unit =
-            if (!cdfEnabled(m.meta)) (_, _, _) => ()
-            else (v, staged, cid) => {
-              import org.apache.spark.sql.functions.{lit, when}
-              val oldKeys = affectedDf.select(keyColumns: _*).distinct()
-              val newRows = scanSpec(spark, Versioned.ScanFiles(tableDir,
-                alignMapping(rewritten.schema, oldSchema, m.meta, b).json,
-                staged.map(_.path)))
-                .join(updKeys, keyCols, "left_semi")
-              val pre = affectedDf.join(updKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_preimage"))
-              // post-image vs insert classified in ONE left join against
-              // the old key set (was a semi + an anti — two scans of the
-              // staged files); same rows, same change types
-              val postIns = newRows.join(
-                  oldKeys.withColumn("__graft_hit", lit(1)), keyCols, "left")
-                .withColumn("_change_type",
-                  when(col("__graft_hit").isNotNull, lit("update_postimage"))
-                    .otherwise(lit("insert")))
-                .drop("__graft_hit")
-              pre.unionByName(postIns, allowMissingColumns = true)
-                .write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)
-            }
-          try {
-            val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
-            val sw = new StagedWrite(spark, bloomColsOf(m))
-            val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
-              inherit = untouched, expectedBase = Some(b),
-              collectStats = sw.collect,
-              // extraMeta rides the SAME manifest (streaming upsert txn
-              // watermarks need batch-id-and-data atomicity)
-              meta = m.meta ++ extraMeta,
-              beforeMarker = writeCdf, op = "MERGE") { target =>
-              sw.write(toPhysical(rewritten, rewrittenM), target,
-                partitionBy = parts)
-            }
-            finishCommit(spark, lh, tableName, tableDir, commit,
-              rewritten.columns.toSeq, parts)
-          } finally affectedDf.unpersist()
-        } finally updKeys.unpersist()
-      case _ =>
-        // legacy snapshot version: one full rewrite converts the table to
-        // manifest-based commits
-        val current = selectTable(spark, lh, tableName)
-        val kept = current.join(updates.select(keyColumns: _*).distinct(),
-          keyCols, "left_anti")
-        writeTable(spark, lh, tableName,
-          kept.unionByName(updates, allowMissingColumns = true),
-          partitionBy = currentPartitioning(lh, tableName),
-          extraMeta = extraMeta)
+            val pre = affectedDf.join(updKeys, keyCols, "left_semi")
+              .withColumn("_change_type", lit("update_preimage"))
+            // post-image vs insert classified in ONE left join against
+            // the old key set (was a semi + an anti — two scans of the
+            // staged files); same rows, same change types
+            val postIns = newRows.join(
+                oldKeys.withColumn("__graft_hit", lit(1)), keyCols, "left")
+              .withColumn("_change_type",
+                when(col("__graft_hit").isNotNull, lit("update_postimage"))
+                  .otherwise(lit("insert")))
+              .drop("__graft_hit")
+            pre.unionByName(postIns, allowMissingColumns = true)
+              .write.mode(SaveMode.Overwrite)
+              .parquet(cdfDir(tableDir, v, cid).toString)
+          }
+        try {
+          val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
+          val sw = new StagedWrite(spark, bloomColsOf(m))
+          val commit = Versioned.commitFiles(tableDir, rewrittenM.json,
+            inherit = untouched, expectedBase = Some(b),
+            collectStats = sw.collect,
+            // extraMeta rides the SAME manifest (streaming upsert txn
+            // watermarks need batch-id-and-data atomicity)
+            meta = m.meta ++ extraMeta,
+            beforeMarker = writeCdf, op = "MERGE") { target =>
+            sw.write(toPhysical(rewritten, rewrittenM), target,
+              partitionBy = parts)
+          }
+          finishCommit(spark, lh, tableName, tableDir, commit,
+            rewritten.columns.toSeq, parts)
+        } finally affectedDf.unpersist()
+      } finally updKeys.unpersist()
     } finally groupedShared.foreach(_.unpersist())
   }
 
@@ -3193,12 +3091,7 @@ object TableIO {
         s"mergeInto: source has multiple rows for key ${dups.headOption.getOrElse("")}")
     }
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs manifest-based versions for conditional merge " +
-          "(legacy snapshot layouts: writeTable once to convert)"))
-    val b = base.get
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(allSets.forall(_.keySet.subsetOf(schema.fieldNames.toSet)),
       "UPDATE SET names a column the target does not have")
@@ -3434,7 +3327,7 @@ object TableIO {
           Some(ins.foldLeft(pre.unionByName(post).unionByName(del))(
             _ unionByName _))
         }
-      val parts = currentPartitioning(lh, tableName)
+      val parts = partitionSpecOf(m.meta, m.files)
       val sw = new StagedWrite(spark, bloomColsOf(m))
       val commit = Versioned.commitFiles(tableDir, m.schemaJson,
         inherit = untouched, expectedBase = Some(b),
@@ -3489,9 +3382,8 @@ object TableIO {
     require(keyCols.nonEmpty, "replaceKeyedRows needs at least one key column")
     val keyColumns = keyCols.map(org.apache.spark.sql.functions.col)
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    (base, base.flatMap(Versioned.readManifest(tableDir, _))) match {
-      case (Some(b), Some(m)) =>
+    Versioned.writeBase(tableDir) match {
+      case Some((b, m)) =>
         // same hazard as mergeTable: replacement rows carry caller-chosen
         // values for EVERY column — on an identity table that forges ids
         require(identityColsOf(m.meta).isEmpty,
@@ -3533,7 +3425,7 @@ object TableIO {
           val kept = affectedDf.join(remA,
             nullSafeOnRemoval(affectedDf), "left_anti")
           val rewritten = kept.unionByName(newRows, allowMissingColumns = true)
-          val parts = currentPartitioning(lh, tableName)
+          val parts = partitionSpecOf(m.meta, m.files)
           val rewrittenM = alignMapping(rewritten.schema, oldSchema, m.meta, b)
           // CDF chaining: a keyed replace stages row-level change events
           // like MERGE does, so replicas maintained by applyChanges are
@@ -3601,8 +3493,8 @@ object TableIO {
               rewritten.columns.toSeq, parts)
           } finally affectedDf.unpersist()
         } finally remKeys.unpersist()
-      case _ => throw new IllegalStateException(
-        s"$tableName: replaceKeyedRows requires a manifest-based table " +
+      case None => throw new IllegalStateException(
+        s"$tableName: replaceKeyedRows requires an existing table " +
           "(write it with writeTable first)")
     }
   }
@@ -3639,14 +3531,10 @@ object TableIO {
   def selectTableVersion(spark: SparkSession, lh: LakehouseProps,
       tableName: String, version: Long): DataFrame = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val spec = Versioned.specFor(tableDir, version)
-    val present = spec match {
-      case _: Versioned.ScanFiles => true
-      case Versioned.ScanDir(p) => Files.isDirectory(Paths.get(p))
-    }
+    val m = Versioned.readManifest(tableDir, version)
     // the marker check rejects orphaned/in-flight claims (a crashed
     // writer's partial files are NOT a committed snapshot)
-    require(Versioned.isCommitted(tableDir, version) && present,
+    require(Versioned.isCommitted(tableDir, version) && m.nonEmpty,
       s"version $version of $tableName was never committed or has been " +
         s"swept (retention: newest ${Versioned.Retain} versions + " +
         s"${Versioned.RetainAgeMs} ms age window)")
@@ -3656,7 +3544,7 @@ object TableIO {
     require(Versioned.txnVisible(tableDir, version),
       s"version $version of $tableName belongs to an uncommitted or " +
         "aborted transaction and was never visible")
-    scanSpec(spark, spec)
+    scanSpec(spark, Versioned.scanOf(tableDir, m.get, m.get.entries))
   }
 
   /** Incremental consumption (the batch form of a Delta streaming source):
@@ -3680,39 +3568,34 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val cur = Versioned.latestVersion(tableDir).getOrElse(
       throw new IllegalArgumentException(s"$tableName has no committed version"))
-    require(Versioned.isCommitted(tableDir, sinceVersion),
-      s"version $sinceVersion of $tableName was never committed or has been swept")
-    val curM = Versioned.readManifest(tableDir, cur)
     val sinceM = Versioned.readManifest(tableDir, sinceVersion)
-    (curM, sinceM) match {
-      case (Some(c), Some(s)) =>
-        val sincePaths = s.files.toSet
-        val removed = sincePaths -- c.files.toSet
-        // a deletion-vector delete removes NO files — detect it by a
-        // changed DV ref on a carried-over file, or additivity silently
-        // misses the deleted rows
-        val dvChanged = {
-          val sinceDv = s.entries.map(e =>
-            e.path -> Versioned.dvRefOf(e)).toMap
-          c.entries.exists(e => sincePaths.contains(e.path) &&
-            sinceDv.get(e.path).exists(_ != Versioned.dvRefOf(e)))
-        }
-        if ((removed.nonEmpty || dvChanged) && !ignoreRewrites)
-          throw new IllegalStateException(
-            s"$tableName: files were rewritten/removed or gained deletion " +
-              s"vectors between versions $sinceVersion and $cur (merge/" +
-              "delete/compaction) — changes-by-file is not purely " +
-              "additive; pass ignoreRewrites = true to read added files " +
-              "(re-delivers surviving rows of rewritten files)")
-        val added = c.entries.filterNot(e => sincePaths.contains(e.path))
-        // added files were created by the commits in (since, cur] and can
-        // still have gained a vector from a LATER DV delete in the range —
-        // scanOf keeps their read honest
-        scanSpec(spark, Versioned.scanOf(tableDir, c, added))
-      case _ => throw new IllegalStateException(
-        s"$tableName: file-level change reads need manifest-based versions " +
-          "on both ends (legacy snapshot layouts have no file history)")
+    require(Versioned.isCommitted(tableDir, sinceVersion) && sinceM.nonEmpty,
+      s"version $sinceVersion of $tableName was never committed or has been swept")
+    val c = Versioned.committedManifest(tableDir, cur)
+    val s = sinceM.get
+    val sincePaths = s.files.toSet
+    val removed = sincePaths -- c.files.toSet
+    // a deletion-vector delete removes NO files — detect it by a
+    // changed DV ref on a carried-over file, or additivity silently
+    // misses the deleted rows
+    val dvChanged = {
+      val sinceDv = s.entries.map(e =>
+        e.path -> Versioned.dvRefOf(e)).toMap
+      c.entries.exists(e => sincePaths.contains(e.path) &&
+        sinceDv.get(e.path).exists(_ != Versioned.dvRefOf(e)))
     }
+    if ((removed.nonEmpty || dvChanged) && !ignoreRewrites)
+      throw new IllegalStateException(
+        s"$tableName: files were rewritten/removed or gained deletion " +
+          s"vectors between versions $sinceVersion and $cur (merge/" +
+          "delete/compaction) — changes-by-file is not purely " +
+          "additive; pass ignoreRewrites = true to read added files " +
+          "(re-delivers surviving rows of rewritten files)")
+    val added = c.entries.filterNot(e => sincePaths.contains(e.path))
+    // added files were created by the commits in (since, cur] and can
+    // still have gained a vector from a LATER DV delete in the range —
+    // scanOf keeps their read honest
+    scanSpec(spark, Versioned.scanOf(tableDir, c, added))
   }
 
   /** TIMESTAMP AS OF time travel: scan the newest version committed at or
@@ -3745,8 +3628,7 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val target = Versioned.readManifest(tableDir, version)
     require(Versioned.isCommitted(tableDir, version) && target.nonEmpty,
-      s"version $version of $tableName was never committed, has been " +
-        "swept, or is a legacy snapshot (not restorable by reference)")
+      s"version $version of $tableName was never committed or has been swept")
     val m = target.get
     require(Versioned.txnVisible(tableDir, version),
       s"version $version of $tableName belongs to an uncommitted or " +
@@ -3757,14 +3639,13 @@ object TableIO {
     require(missing.isEmpty,
       s"cannot restore $tableName to $version: ${missing.size} of its data " +
         "files were already vacuumed")
-    val base = Versioned.latestVersion(tableDir)
+    val base = Versioned.writeBase(tableDir)
     // restoring reverts data AND properties to the target version — with
     // ONE exception: identity high-watermarks stay MONOTONIC (max of
     // then and now). Reverting a watermark would hand out ids that rows
     // committed after the target version already used, and those rows
     // may live on in clones, exports, or downstream joins.
-    val curMeta = base.flatMap(Versioned.readManifest(tableDir, _))
-      .map(_.meta).getOrElse(Map.empty[String, String])
+    val curMeta = base.fold(Map.empty[String, String])(_._2.meta)
     val restoredMeta = m.meta ++ curMeta.collect {
       case (k, v) if k.startsWith(IdentityMaxPrefix) =>
         val thenWm = m.meta.get(k)
@@ -3773,11 +3654,11 @@ object TableIO {
         k -> math.max(thenWm, nowWm).toString
     }
     val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-      inherit = m.entries, expectedBase = base, meta = restoredMeta,
+      inherit = m.entries, expectedBase = base.map(_._1), meta = restoredMeta,
       op = "RESTORE") { _ => () }
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
+      schema.fieldNames.toSeq, partitionSpecOf(restoredMeta, m.files))
   }
 
   /** Serializable DML retry — the client-side loop every Delta writer
@@ -3846,10 +3727,7 @@ object TableIO {
     val srcDir = Catalog.tablePath(lh, sourceName)
     val srcVersion = Versioned.latestVersion(srcDir).getOrElse(
       throw new IllegalArgumentException(s"$sourceName has no versions"))
-    val m = Versioned.readManifest(srcDir, srcVersion).getOrElse(
-      throw new IllegalArgumentException(
-        s"$sourceName@v$srcVersion is a legacy snapshot layout — shallow " +
-          "clone references manifest entries"))
+    val m = Versioned.committedManifest(srcDir, srcVersion)
     val srcBase = Paths.get(srcDir)
     if (deep) return deepClone(spark, lh, sourceName, cloneName, srcVersion,
       m, srcBase)
@@ -3993,10 +3871,7 @@ object TableIO {
   def evolvePartitioning(spark: SparkSession, lh: LakehouseProps,
       tableName: String, partitionBy: Seq[String]): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no manifest versions (legacy layouts need a rewrite)"))
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(partitionBy.forall(schema.fieldNames.contains),
       s"partition columns must exist: ${partitionBy.mkString(", ")}")
@@ -4005,7 +3880,7 @@ object TableIO {
     require(partitionBy.forall(c => !c.contains(",") && !c.contains("\n")),
       "partition column names must not contain ',' or newlines")
     val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-      inherit = m.entries, expectedBase = base,
+      inherit = m.entries, expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (PartitionByKey -> partitionBy.mkString(",")),
         "partitionEvolution"),
@@ -4061,10 +3936,7 @@ object TableIO {
   def widenColumnType(spark: SparkSession, lh: LakehouseProps,
       tableName: String, colName: String, to: DataType): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs manifest-based versions for metadata-only DDL"))
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName),
       s"$tableName has no column $colName")
@@ -4088,20 +3960,17 @@ object TableIO {
     val entries = m.entries.map(e =>
       e.copy(stats = e.stats.map(removeStatField(_, bloomKey))))
     val commit = Versioned.commitFiles(tableDir, newSchema.json,
-      inherit = entries, expectedBase = base,
+      inherit = entries, expectedBase = Some(b),
       meta = Versioned.withFeature(m.meta, "typeWidening"),
       op = "WIDEN") { _ => () }
     finishCommit(spark, lh, tableName, tableDir, commit,
-      newSchema.fieldNames.toSeq, currentPartitioning(lh, tableName))
+      newSchema.fieldNames.toSeq, partitionSpecOf(m.meta, m.files))
   }
 
   def renameColumn(spark: SparkSession, lh: LakehouseProps, tableName: String,
       oldName: String, newName: String): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no manifest versions (legacy layouts need a rewrite)"))
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(oldName),
       s"$tableName has no column $oldName")
@@ -4134,7 +4003,7 @@ object TableIO {
         (IdentityMaxPrefix + newName ->
           m.meta.getOrElse(IdentityMaxPrefix + oldName, "0"))
     val commit = Versioned.commitFiles(tableDir, renamed.json,
-      inherit = m.entries, expectedBase = base,
+      inherit = m.entries, expectedBase = Some(b),
       meta = Versioned.withFeature(reKeyed, "columnMapping"),
       op = "RENAME COLUMN") { _ => () }
     finishCommit(spark, lh, tableName, tableDir, commit,
@@ -4149,10 +4018,7 @@ object TableIO {
   def dropColumn(spark: SparkSession, lh: LakehouseProps, tableName: String,
       colName: String): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName has no manifest versions (legacy layouts need a rewrite)"))
+    val (b, m) = existingBase(tableDir, tableName)
     val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.contains(colName),
       s"$tableName has no column $colName")
@@ -4177,7 +4043,7 @@ object TableIO {
       if (f.metadata.contains(PhysicalKey)) f.metadata.getString(PhysicalKey)
       else f.name).get
     val commit = Versioned.commitFiles(tableDir, narrowed.json,
-      inherit = m.entries, expectedBase = base,
+      inherit = m.entries, expectedBase = Some(b),
       meta = Versioned.withFeature(
         m.meta + (TombstonePrefix + dropped -> "1"), "columnMapping"),
       op = "DROP COLUMN") { _ => () }
@@ -4187,7 +4053,7 @@ object TableIO {
 
   /** Metadata-only row count of the current version (sum of the
     * manifest's per-file counts) — free at any scale. None when the table
-    * predates per-file counts or is a legacy layout (callers fall back to
+    * predates per-file counts or is pre-protocol (callers fall back to
     * a real count() once; the next rewrite regains the fast path). */
   def tableRowCount(lh: LakehouseProps, tableName: String): Option[Long] = {
     val tableDir = Catalog.tablePath(lh, tableName)
@@ -4212,9 +4078,7 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val v = Versioned.latestVersion(tableDir).getOrElse(
       throw new IllegalArgumentException(s"$tableName has no versions"))
-    val m = Versioned.readManifest(tableDir, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName@v$v is a legacy snapshot layout"))
+    val m = Versioned.committedManifest(tableDir, v)
     val baseP = Paths.get(tableDir)
     // manifest-recorded sizes when present (no stat() storm at 1M files);
     // stat() only for entries from before sizes were collected
@@ -4250,9 +4114,7 @@ object TableIO {
     val tableDir = Catalog.tablePath(lh, tableName)
     val v = Versioned.latestVersion(tableDir).getOrElse(
       throw new IllegalArgumentException(s"$tableName has no versions"))
-    val m = Versioned.readManifest(tableDir, v).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName@v$v is a legacy snapshot layout"))
+    val m = Versioned.committedManifest(tableDir, v)
     val baseP = Paths.get(tableDir)
     m.entries.map { e =>
       val phys = entryRows(e)
@@ -4292,8 +4154,8 @@ object TableIO {
       case Some(v) =>
         Versioned.readManifest(tableDir, v) match {
           case None =>
-            findings += (("legacy_layout", tableDir,
-              s"version $v has no manifest (pre-protocol snapshot)"))
+            findings += (("missing_manifest", tableDir,
+              s"version $v is committed but its manifest is missing"))
           case Some(m) =>
             m.entries.foreach { e =>
               val p = baseP.resolve(e.path)
@@ -4391,14 +4253,11 @@ object TableIO {
       key: String, value: Option[String],
       feature: Option[String] = None): Unit = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs a manifest-based version to carry properties"))
+    val (b, m) = existingBase(tableDir, tableName)
     val newMeta0 = value.fold(m.meta - key)(v => m.meta + (key -> v))
     val newMeta = feature.fold(newMeta0)(Versioned.withFeature(newMeta0, _))
     Versioned.commitFiles(tableDir, m.schemaJson, inherit = m.entries,
-      expectedBase = base, meta = newMeta, op = "SET PROPERTY") { _ => () }
+      expectedBase = Some(b), meta = newMeta, op = "SET PROPERTY") { _ => () }
     ()
   }
 
@@ -4412,19 +4271,6 @@ object TableIO {
     * out. */
   private def cdfDir(tableDir: String, v: Long, commitId: String): Path =
     Paths.get(tableDir).resolve(s"_cdf_${v}_$commitId")
-
-  /** Reader-side resolution: a manifest that names a commit id resolves
-    * ONLY to its own suffixed sidecar — a legacy `_cdf_<v>` present beside
-    * it could only have been written by some OTHER (evicted/old-binary)
-    * writer, and silently serving it would re-open the clobber the
-    * suffix exists to prevent. Pre-commitId manifests use the legacy
-    * path. Missing directories surface as the caller's loud error. */
-  private def cdfDirOf(tableDir: String, v: Long,
-      meta: Map[String, String]): Path =
-    meta.get(Versioned.CommitIdKey) match {
-      case Some(id) => Paths.get(tableDir).resolve(s"_cdf_${v}_$id")
-      case None => Paths.get(tableDir).resolve(s"_cdf_$v")
-    }
 
   /** Row-level changes since `sinceVersion` (Delta `table_changes`): for
     * each later commit — appends yield their added files' rows as
@@ -4509,12 +4355,15 @@ object TableIO {
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(v)))
         else {
-          val d = cdfDirOf(tableDir, v, m.meta)
-          if (!Files.isDirectory(d)) throw new IllegalStateException(
-            s"$tableDir: version $v rewrote files but has no change-data " +
-              "sidecar — the commit predates enableChangeFeed (or was a " +
-              "RESTORE, the one write path the feed does not model); " +
-              "re-baseline the consumer from a full snapshot")
+          // the reader resolves ONLY the sidecar of the commit id its
+          // manifest names — any other `_cdf_` dir is an evicted writer's
+          val d = m.meta.get(Versioned.CommitIdKey)
+            .map(cdfDir(tableDir, v, _)).filter(Files.isDirectory(_))
+            .getOrElse(throw new IllegalStateException(
+              s"$tableDir: version $v rewrote files but has no change-data " +
+                "sidecar — the commit predates enableChangeFeed (or was a " +
+                "RESTORE, the one write path the feed does not model); " +
+                "re-baseline the consumer from a full snapshot"))
           Some(spark.read.parquet(d.toString)
             .withColumn("_commit_version", lit(v)))
         }
@@ -4549,8 +4398,7 @@ object TableIO {
       predicate: Option[String] = None,
       hilbert: Boolean = false): TableInfo = {
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val baseM = base.flatMap(Versioned.readManifest(tableDir, _))
+    val (b, m) = existingBase(tableDir, tableName)
     // predicate = Delta's `OPTIMIZE ... WHERE`: only files that MAY hold
     // matching rows (partition values / stat ranges, same mining as
     // readTable's skipping) are rewritten; the rest inherit BY REFERENCE —
@@ -4558,104 +4406,79 @@ object TableIO {
     // being written, and a whole-table rewrite per OPTIMIZE is not operable.
     // An unscoped (or unminable, or matches-every-file) compaction is the
     // SAME flow with affected = every current file.
-    (base, baseM) match {
-      case (Some(b), Some(m)) =>
-        val mined = (for {
-          p <- predicate
-          aff <- minedSurvivors(spark, m, p) if aff.size < m.entries.size
-        } yield aff).getOrElse(m.entries)
-        val parts = currentPartitioning(lh, tableName)
-        val baseP = Paths.get(tableDir)
-        def sizeOf(e: Versioned.FileEntry): Long = entryBytes(e).getOrElse(
-          scala.util.Try(Files.size(baseP.resolve(e.path))).getOrElse(0L))
-        // Within the mined scope, rewrite only files that NEED it: smaller
-        // than target (the small-file problem OPTIMIZE exists for) or
-        // carrying a deletion vector (the rewrite purges it). Right-sized
-        // DV-free files inherit by reference — Delta OPTIMIZE's bin-packing
-        // selection; rewriting an already-compact 1 GB file on a 100 TB
-        // table is pure churn. ZORDER BY is a re-clustering pass instead:
-        // every mined file rewrites regardless of size.
-        val affected =
-          if (zorderBy.nonEmpty) mined
-          else mined.filter(e =>
-            Versioned.dvRefOf(e).isDefined || sizeOf(e) < targetFileBytes)
-        val bytes = affected.map(sizeOf).sum
-        val nFiles =
-          math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val df = scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
-        // Row tracking: the rewrite MATERIALIZES each surviving row's id
-        // as the physical __row_id column (Delta's materialized row ids) —
-        // reads of rewritten files take the physical value over the
-        // base+index computation, so compaction never changes a row's
-        // identity. DV'd rows are already subtracted from the scan; their
-        // ids retire with them.
-        val rowTracked = m.meta.contains(Versioned.RowTrackingKey)
-        val dfW =
-          if (!rowTracked) df
-          else withRowIds(spark, tableDir, m, affected)
-            .withColumnRenamed(RowIdColName, PhysRowIdCol)
-        // zorderBy = OPTIMIZE ZORDER BY: the rewrite this compaction
-        // already pays doubles as the re-clustering pass
-        val arranged =
-          if (zorderBy.nonEmpty)
-            Zorder.cluster(dfW, zorderBy, Some(nFiles), hilbert)
-          else if (parts.isEmpty) dfW.coalesce(nFiles)
-          else dfW.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
-        val blooms = bloomColsOf(m)
-        // compaction is invisible to the change feed: same rows, new files —
-        // an EMPTY sidecar tells readChangeFeed "rewrite, zero logical
-        // changes"
-        val emptyCdf: Option[DataFrame] =
-          if (!cdfEnabled(m.meta)) None
-          else Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-            df.schema.add("_change_type", StringType)))
-        // a ZORDER compaction records its cluster spec so later
-        // maintenance ticks (maintainTable / clusterIncremental) know the
-        // table's clustering without being retold — liquid's CLUSTER BY
-        def metaOut(mm: Map[String, String]): Map[String, String] =
-          if (zorderBy.isEmpty) mm
-          else mm + (ClusterByKey -> zorderBy.mkString(",")) +
-            (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder"))
-        val sw = new StagedWrite(spark, blooms)
-        val commit = commitMaintenance(tableDir, b, m, affected,
-          metaOf = metaOut,
-          collectStats = sw.collect,
-          beforeMarker = (v, _, cid) => emptyCdf.foreach(
-            _.write.mode(SaveMode.Overwrite)
-              .parquet(cdfDir(tableDir, v, cid).toString)),
-          op = "OPTIMIZE") { target =>
-          if (affected.nonEmpty) {
-            val physical = toPhysical(arranged,
-              DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-            sw.write(physical, target, partitionBy = parts,
-              parquetBloomCols = blooms)
-          }
-        }
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          df.columns.toSeq, parts)
-      case _ => // legacy snapshot table: one full rewrite converts it to
-        // manifest-based commits (no manifest, so no stats/blooms/CDF yet)
-        val bytes = currentFiles(lh, tableName)
-          .filter(Files.isRegularFile(_)).map(Files.size).sum
-        val nFiles =
-          math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val df = selectTable(spark, lh, tableName)
-        val parts = currentPartitioning(lh, tableName)
-        val arranged =
-          if (zorderBy.nonEmpty)
-            Zorder.cluster(df, zorderBy, Some(nFiles), hilbert)
-          else if (parts.isEmpty) df.coalesce(nFiles)
-          else df.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
-        val sw = new StagedWrite(spark)
-        val commit = Versioned.commitFiles(tableDir, df.schema.json,
-          expectedBase = base,
-          collectStats = sw.collect,
-          op = "OPTIMIZE") { target =>
-          sw.write(arranged, target, partitionBy = parts)
-        }
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          df.columns.toSeq, parts)
+    val mined = (for {
+      p <- predicate
+      aff <- minedSurvivors(spark, m, p) if aff.size < m.entries.size
+    } yield aff).getOrElse(m.entries)
+    val parts = partitionSpecOf(m.meta, m.files)
+    val baseP = Paths.get(tableDir)
+    def sizeOf(e: Versioned.FileEntry): Long = entryBytes(e).getOrElse(
+      scala.util.Try(Files.size(baseP.resolve(e.path))).getOrElse(0L))
+    // Within the mined scope, rewrite only files that NEED it: smaller
+    // than target (the small-file problem OPTIMIZE exists for) or
+    // carrying a deletion vector (the rewrite purges it). Right-sized
+    // DV-free files inherit by reference — Delta OPTIMIZE's bin-packing
+    // selection; rewriting an already-compact 1 GB file on a 100 TB
+    // table is pure churn. ZORDER BY is a re-clustering pass instead:
+    // every mined file rewrites regardless of size.
+    val affected =
+      if (zorderBy.nonEmpty) mined
+      else mined.filter(e =>
+        Versioned.dvRefOf(e).isDefined || sizeOf(e) < targetFileBytes)
+    val bytes = affected.map(sizeOf).sum
+    val nFiles =
+      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    val df = scanSpec(spark, Versioned.scanOf(tableDir, m, affected))
+    // Row tracking: the rewrite MATERIALIZES each surviving row's id
+    // as the physical __row_id column (Delta's materialized row ids) —
+    // reads of rewritten files take the physical value over the
+    // base+index computation, so compaction never changes a row's
+    // identity. DV'd rows are already subtracted from the scan; their
+    // ids retire with them.
+    val rowTracked = m.meta.contains(Versioned.RowTrackingKey)
+    val dfW =
+      if (!rowTracked) df
+      else withRowIds(spark, tableDir, m, affected)
+        .withColumnRenamed(RowIdColName, PhysRowIdCol)
+    // zorderBy = OPTIMIZE ZORDER BY: the rewrite this compaction
+    // already pays doubles as the re-clustering pass
+    val arranged =
+      if (zorderBy.nonEmpty)
+        Zorder.cluster(dfW, zorderBy, Some(nFiles), hilbert)
+      else if (parts.isEmpty) dfW.coalesce(nFiles)
+      else dfW.repartition(parts.map(org.apache.spark.sql.functions.col): _*)
+    val blooms = bloomColsOf(m)
+    // compaction is invisible to the change feed: same rows, new files —
+    // an EMPTY sidecar tells readChangeFeed "rewrite, zero logical
+    // changes"
+    val emptyCdf: Option[DataFrame] =
+      if (!cdfEnabled(m.meta)) None
+      else Some(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        df.schema.add("_change_type", StringType)))
+    // a ZORDER compaction records its cluster spec so later
+    // maintenance ticks (maintainTable / clusterIncremental) know the
+    // table's clustering without being retold — liquid's CLUSTER BY
+    def metaOut(mm: Map[String, String]): Map[String, String] =
+      if (zorderBy.isEmpty) mm
+      else mm + (ClusterByKey -> zorderBy.mkString(",")) +
+        (ClusterCurveKey -> (if (hilbert) "hilbert" else "zorder"))
+    val sw = new StagedWrite(spark, blooms)
+    val commit = commitMaintenance(tableDir, b, m, affected,
+      metaOf = metaOut,
+      collectStats = sw.collect,
+      beforeMarker = (v, _, cid) => emptyCdf.foreach(
+        _.write.mode(SaveMode.Overwrite)
+          .parquet(cdfDir(tableDir, v, cid).toString)),
+      op = "OPTIMIZE") { target =>
+      if (affected.nonEmpty) {
+        val physical = toPhysical(arranged,
+          DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
+        sw.write(physical, target, partitionBy = parts,
+          parquetBloomCols = blooms)
+      }
     }
+    finishCommit(spark, lh, tableName, tableDir, commit,
+      df.columns.toSeq, parts)
   }
 
   /** Manifest meta keys remembering the table's declared clustering —
@@ -4806,11 +4629,7 @@ object TableIO {
       hilbert: Boolean = false): TableInfo = {
     require(zorderBy.nonEmpty, "clusterIncremental needs cluster columns")
     val tableDir = Catalog.tablePath(lh, tableName)
-    val b = Versioned.latestVersion(tableDir).getOrElse(
-      throw new IllegalArgumentException(s"$tableName has no versions"))
-    val m = Versioned.readManifest(tableDir, b).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName: incremental clustering needs manifest-based commits"))
+    val (b, m) = existingBase(tableDir, tableName)
     // baseline = the file set of the newest OPTIMIZE commit: everything in
     // it was clustered (or deliberately left) by that run
     val baseline: Set[String] = Versioned.committedVersions(tableDir)
@@ -4820,7 +4639,7 @@ object TableIO {
       .flatMap(v => Versioned.readManifest(tableDir, v))
       .map(_.files.toSet).getOrElse(Set.empty)
     val affected = m.entries.filterNot(e => baseline(e.path))
-    val parts = currentPartitioning(lh, tableName)
+    val parts = partitionSpecOf(m.meta, m.files)
     val baseP = Paths.get(tableDir)
     val bytes = affected.map(e => entryBytes(e).getOrElse(
       scala.util.Try(Files.size(baseP.resolve(e.path))).getOrElse(0L))).sum
@@ -4880,126 +4699,120 @@ object TableIO {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val cond = coalesce(expr(condition), lit(false))
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    (base, base.flatMap(Versioned.readManifest(tableDir, _))) match {
-      case (Some(b), Some(m)) if deletionVectors =>
-        import org.apache.spark.sql.functions.{collect_list, sort_array}
-        // matched LOGICAL rows (already-vectored rows can't re-match, so
-        // CDF preimages and counts stay exact on repeated DV deletes)
-        val matched = scanFiles(spark,
-          Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+    val (b, m) = existingBase(tableDir, tableName)
+    val parts = partitionSpecOf(m.meta, m.files)
+    if (deletionVectors) {
+      import org.apache.spark.sql.functions.{collect_list, sort_array}
+      // matched LOGICAL rows (already-vectored rows can't re-match, so
+      // CDF preimages and counts stay exact on repeated DV deletes)
+      val matched = scanFiles(spark,
+        Versioned.scanOf(tableDir, m, m.entries), keepMeta = true)
+        .filter(cond)
+      val withCdf = cdfEnabled(m.meta)
+      if (withCdf) matched.persist()
+      // per-file sorted new-deletion positions; driver memory is
+      // O(matched rows) longs — the shape DV mode exists for is sparse,
+      // and a dense delete should use rewrite mode anyway
+      val perFile = matched
+        .groupBy(col(FpCol).as("__fp"))
+        .agg(sort_array(collect_list(col(RiCol))).as("__ris"))
+        .collect()
+      val baseP = Paths.get(tableDir)
+      val newDeletes: Map[String, Array[Long]] = perFile.map { r =>
+        new java.net.URI(r.getString(0)).getPath ->
+          r.getSeq[Long](1).toArray
+      }.toMap
+      val entries2 = m.entries.map { e =>
+        newDeletes.get(baseP.resolve(e.path).toString) match {
+          case None => e
+          case Some(add) =>
+            val existing = Versioned.dvRefOf(e) match {
+              case Some((p, _)) => DeletionVectors.read(
+                if (Paths.get(p).isAbsolute) Paths.get(p)
+                else baseP.resolve(p))
+              case None => Array.empty[Long]
+            }
+            val all = DeletionVectors.merged(existing, add)
+            val sidecar = DeletionVectors.write(tableDir, all)
+            e.copy(stats = Some(
+              withDvStat(e.stats, sidecar, all.length.toLong)))
+        }
+      }
+      val changes: Option[DataFrame] =
+        if (!withCdf || perFile.isEmpty) None
+        else Some(matched.drop(FpCol, RiCol)
+          .withColumn("_change_type", lit("delete")))
+      try {
+        val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+          inherit = entries2, expectedBase = Some(b),
+          meta = Versioned.withFeature(m.meta, "deletionVectors"),
+          beforeMarker = (v, _, cid) => changes.foreach(
+            _.write.mode(SaveMode.Overwrite)
+              .parquet(cdfDir(tableDir, v, cid).toString)),
+          op = "DELETE") { _ => () }
+        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        finishCommit(spark, lh, tableName, tableDir, commit,
+          schema.fieldNames.toSeq, parts)
+      } finally if (withCdf) matched.unpersist()
+    } else {
+      val affectedPaths =
+        if (m.entries.isEmpty) Set.empty[String]
+        else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+          keepMeta = true)
           .filter(cond)
-        val withCdf = cdfEnabled(m.meta)
-        if (withCdf) matched.persist()
-        // per-file sorted new-deletion positions; driver memory is
-        // O(matched rows) longs — the shape DV mode exists for is sparse,
-        // and a dense delete should use rewrite mode anyway
-        val perFile = matched
-          .groupBy(col(FpCol).as("__fp"))
-          .agg(sort_array(collect_list(col(RiCol))).as("__ris"))
-          .collect()
-        val baseP = Paths.get(tableDir)
-        val newDeletes: Map[String, Array[Long]] = perFile.map { r =>
-          new java.net.URI(r.getString(0)).getPath ->
-            r.getSeq[Long](1).toArray
-        }.toMap
-        val entries2 = m.entries.map { e =>
-          newDeletes.get(baseP.resolve(e.path).toString) match {
-            case None => e
-            case Some(add) =>
-              val existing = Versioned.dvRefOf(e) match {
-                case Some((p, _)) => DeletionVectors.read(
-                  if (Paths.get(p).isAbsolute) Paths.get(p)
-                  else baseP.resolve(p))
-                case None => Array.empty[Long]
-              }
-              val all = DeletionVectors.merged(existing, add)
-              val sidecar = DeletionVectors.write(tableDir, all)
-              e.copy(stats = Some(
-                withDvStat(e.stats, sidecar, all.length.toLong)))
+          .select(col(FpCol).as("__fp")).distinct()
+          .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+      val baseP = Paths.get(tableDir)
+      val (affected, untouched) = m.entries.partition(e =>
+        affectedPaths.contains(baseP.resolve(e.path).toString))
+      // scanOf, NOT a raw file list: an affected file may carry a
+      // deletion vector from an earlier DV delete, and scanning it raw
+      // would re-emit delete events for (and below, RESURRECT) rows that
+      // are already logically gone. With CDF on a non-row-tracked table
+      // the same scan feeds BOTH the survivor rewrite and the delete
+      // events — persist it so the affected files read once, not twice.
+      val affectedScan: Option[DataFrame] =
+        if (affected.isEmpty) None
+        else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
+      val shareScan = cdfEnabled(m.meta) &&
+        !m.meta.contains(Versioned.RowTrackingKey)
+      val affectedShared = affectedScan.map(df =>
+        if (shareScan) df.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        else df)
+      try {
+        val changes: Option[DataFrame] =
+          if (!cdfEnabled(m.meta)) None
+          else affectedShared.map(_.filter(cond)
+            .withColumn("_change_type",
+              org.apache.spark.sql.functions.lit("delete")))
+        val sw = new StagedWrite(spark, bloomColsOf(m))
+        val commit = Versioned.commitFiles(tableDir, m.schemaJson,
+          inherit = untouched, expectedBase = Some(b),
+          collectStats = sw.collect,
+          meta = m.meta,
+          beforeMarker = (v, _, cid) => changes.foreach(
+            _.write.mode(SaveMode.Overwrite)
+              .parquet(cdfDir(tableDir, v, cid).toString)),
+          op = "DELETE") { target =>
+          if (affected.nonEmpty) {
+            // row-tracked tables: survivors carry their materialized ids
+            // through the rewrite — DELETE never changes a row's identity
+            val survivors =
+              (if (!m.meta.contains(Versioned.RowTrackingKey))
+                affectedShared.get
+              else withRowIds(spark, tableDir, m, affected)
+                .withColumnRenamed(RowIdColName, PhysRowIdCol))
+              .filter(not(cond))
+            sw.write(toPhysical(survivors,
+                DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
+              target, partitionBy = parts)
           }
         }
-        val changes: Option[DataFrame] =
-          if (!withCdf || perFile.isEmpty) None
-          else Some(matched.drop(FpCol, RiCol)
-            .withColumn("_change_type", lit("delete")))
-        try {
-          val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-            inherit = entries2, expectedBase = Some(b),
-            meta = Versioned.withFeature(m.meta, "deletionVectors"),
-            beforeMarker = (v, _, cid) => changes.foreach(
-              _.write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)),
-            op = "DELETE") { _ => () }
-          val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          finishCommit(spark, lh, tableName, tableDir, commit,
-            schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
-        } finally if (withCdf) matched.unpersist()
-      case (Some(b), Some(m)) =>
-        val affectedPaths =
-          if (m.entries.isEmpty) Set.empty[String]
-          else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
-            keepMeta = true)
-            .filter(cond)
-            .select(col(FpCol).as("__fp")).distinct()
-            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-        val baseP = Paths.get(tableDir)
-        val (affected, untouched) = m.entries.partition(e =>
-          affectedPaths.contains(baseP.resolve(e.path).toString))
-        val parts = currentPartitioning(lh, tableName)
-        // scanOf, NOT a raw file list: an affected file may carry a
-        // deletion vector from an earlier DV delete, and scanning it raw
-        // would re-emit delete events for (and below, RESURRECT) rows that
-        // are already logically gone. With CDF on a non-row-tracked table
-        // the same scan feeds BOTH the survivor rewrite and the delete
-        // events — persist it so the affected files read once, not twice.
-        val affectedScan: Option[DataFrame] =
-          if (affected.isEmpty) None
-          else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected)))
-        val shareScan = cdfEnabled(m.meta) &&
-          !m.meta.contains(Versioned.RowTrackingKey)
-        val affectedShared = affectedScan.map(df =>
-          if (shareScan) df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else df)
-        try {
-          val changes: Option[DataFrame] =
-            if (!cdfEnabled(m.meta)) None
-            else affectedShared.map(_.filter(cond)
-              .withColumn("_change_type",
-                org.apache.spark.sql.functions.lit("delete")))
-          val sw = new StagedWrite(spark, bloomColsOf(m))
-          val commit = Versioned.commitFiles(tableDir, m.schemaJson,
-            inherit = untouched, expectedBase = Some(b),
-            collectStats = sw.collect,
-            meta = m.meta,
-            beforeMarker = (v, _, cid) => changes.foreach(
-              _.write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)),
-            op = "DELETE") { target =>
-            if (affected.nonEmpty) {
-              // row-tracked tables: survivors carry their materialized ids
-              // through the rewrite — DELETE never changes a row's identity
-              val survivors =
-                (if (!m.meta.contains(Versioned.RowTrackingKey))
-                  affectedShared.get
-                else withRowIds(spark, tableDir, m, affected)
-                  .withColumnRenamed(RowIdColName, PhysRowIdCol))
-                .filter(not(cond))
-              sw.write(toPhysical(survivors,
-                  DataType.fromJson(m.schemaJson).asInstanceOf[StructType]),
-                target, partitionBy = parts)
-            }
-          }
-          val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-          finishCommit(spark, lh, tableName, tableDir, commit,
-            schema.fieldNames.toSeq, parts)
-        } finally if (shareScan) affectedShared.foreach(_.unpersist())
-      case _ =>
-        // legacy layout: one full filtered rewrite adopts the protocol
-        val current = selectTable(spark, lh, tableName)
-        writeTable(spark, lh, tableName, current.filter(not(cond)),
-          partitionBy = currentPartitioning(lh, tableName))
+        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        finishCommit(spark, lh, tableName, tableDir, commit,
+          schema.fieldNames.toSeq, parts)
+      } finally if (shareScan) affectedShared.foreach(_.unpersist())
     }
   }
 
@@ -5015,10 +4828,7 @@ object TableIO {
       tableName: String, bloomFilterFor: Seq[String] = Seq.empty): TableInfo = {
     import org.apache.spark.sql.functions.col
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    val m = base.flatMap(Versioned.readManifest(tableDir, _)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$tableName needs manifest-based versions (convert or rewrite first)"))
+    val (b, m) = existingBase(tableDir, tableName)
     // collectFileStats over the table dir would also sweep files of OTHER
     // retained versions — aggregate over exactly the manifest's file list
     // instead, keyed by provenance. Metadata cols ride the raw physical
@@ -5058,12 +4868,12 @@ object TableIO {
     // paths; newcomers (whose stats the concurrent writer collected at its
     // own commit) inherit as-is. Any concurrent touch to a re-statted file
     // is a real conflict — our stale stats must not overwrite its state.
-    val commit = commitMaintenance(tableDir, base.getOrElse(0L), m,
+    val commit = commitMaintenance(tableDir, b, m,
       affected = m.entries, metaOf = identity,
       collectStats = _ => Map.empty, beforeMarker = (_, _, _) => (),
       op = "ANALYZE", replaced = entries) { _ => () }
     finishCommit(spark, lh, tableName, tableDir, commit,
-      schema.fieldNames.toSeq, currentPartitioning(lh, tableName))
+      schema.fieldNames.toSeq, partitionSpecOf(m.meta, m.files))
   }
 
   /** Per-file stats JSON over an arbitrary keepMeta scan, keyed by the
@@ -5280,102 +5090,87 @@ object TableIO {
     require(set.nonEmpty, "updateTable needs at least one SET column")
     val cond = coalesce(expr(condition), lit(false))
     val tableDir = Catalog.tablePath(lh, tableName)
-    val base = Versioned.latestVersion(tableDir)
-    (base, base.flatMap(Versioned.readManifest(tableDir, _))) match {
-      case (Some(b), Some(m)) =>
-        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-        require(set.keySet.subsetOf(schema.fieldNames.toSet),
-          s"UPDATE SET names missing columns: " +
-            s"${set.keySet -- schema.fieldNames}")
-        // GENERATED ALWAYS AS IDENTITY: ids are engine-assigned, never
-        // user-writable — a SET here would silently break uniqueness.
-        // (Generated columns need no guard: their paired CHECK rejects an
-        // inconsistent post-image at enforceChecks below.)
-        identityColsOf(m.meta).filter(set.contains).foreach(c =>
-          throw new IllegalArgumentException(
-            s"$tableName.$c is GENERATED ALWAYS AS IDENTITY — UPDATE SET " +
-              "cannot modify it"))
-        val affectedPaths =
-          if (m.entries.isEmpty) Set.empty[String]
-          else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
-            keepMeta = true)
-            .filter(cond)
-            .select(col(FpCol).as("__fp")).distinct()
-            .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
-        val baseP = Paths.get(tableDir)
-        val (affected, untouched) = m.entries.partition(e =>
-          affectedPaths.contains(baseP.resolve(e.path).toString))
-        val parts = currentPartitioning(lh, tableName)
-        def applied(df: DataFrame): DataFrame = {
-          // row-tracked rewrites carry the materialized id through the SET
-          // projection — UPDATE changes a row's content, not its identity
-          val keep =
-            if (df.columns.contains(PhysRowIdCol)) Seq(col(PhysRowIdCol))
-            else Seq.empty
-          df.select(schema.fields.map { f =>
-            set.get(f.name) match {
-              case Some(e) =>
-                when(cond, expr(e).cast(f.dataType))
-                  .otherwise(col(f.name)).as(f.name)
-              case None => col(f.name)
-            }
-          }.toSeq ++ keep: _*)
-        }
-        // with CDF the affected scan feeds THREE plans (the rewrite, the
-        // pre-image filter, and the post-image projection of the same
-        // matched rows) — persist it so the affected files read once
-        val shareScan = cdfEnabled(m.meta) && affected.nonEmpty
-        val affectedScan: Option[DataFrame] =
-          (if (affected.isEmpty) None
-          else if (m.meta.contains(Versioned.RowTrackingKey))
-            Some(withRowIds(spark, tableDir, m, affected)
-              .withColumnRenamed(RowIdColName, PhysRowIdCol))
-          else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected))))
-            .map(df => if (shareScan) df.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df)
-        // everything after the persist — including the CHECK-constraint
-        // validation, which can throw — sits inside the unpersist guard
-        val commit = try {
-          val rewritten = affectedScan.map(applied)
-          rewritten.foreach(r =>
-            enforceChecks(r, checkConstraintsOf(m.meta), s"$tableName: update"))
-          val changes: Option[DataFrame] =
-            if (!cdfEnabled(m.meta) || affected.isEmpty) None
-            else affectedScan.map { sc =>
-              val matched = sc.filter(cond).drop(PhysRowIdCol)
-              matched.withColumn("_change_type", lit("update_preimage"))
-                .unionByName(applied(matched)
-                  .withColumn("_change_type", lit("update_postimage")))
-            }
-          val sw = new StagedWrite(spark, bloomColsOf(m))
-          Versioned.commitFiles(tableDir, m.schemaJson,
-            inherit = untouched, expectedBase = Some(b),
-            collectStats = sw.collect,
-            meta = m.meta,
-            beforeMarker = (v, _, cid) => changes.foreach(
-              _.write.mode(SaveMode.Overwrite)
-                .parquet(cdfDir(tableDir, v, cid).toString)),
-            op = "UPDATE") { target =>
-            rewritten.foreach { r =>
-              sw.write(toPhysical(r, schema), target, partitionBy = parts)
-            }
-          }
-        } finally { if (shareScan) affectedScan.foreach(_.unpersist()) }
-        finishCommit(spark, lh, tableName, tableDir, commit,
-          schema.fieldNames.toSeq, parts)
-      case _ =>
-        // legacy layout: one full rewritten snapshot adopts the protocol
-        val current = selectTable(spark, lh, tableName)
-        val out = current.select(current.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) => when(cond, expr(e).cast(f.dataType))
+    val (b, m) = existingBase(tableDir, tableName)
+    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    require(set.keySet.subsetOf(schema.fieldNames.toSet),
+      s"UPDATE SET names missing columns: " +
+        s"${set.keySet -- schema.fieldNames}")
+    // GENERATED ALWAYS AS IDENTITY: ids are engine-assigned, never
+    // user-writable — a SET here would silently break uniqueness.
+    // (Generated columns need no guard: their paired CHECK rejects an
+    // inconsistent post-image at enforceChecks below.)
+    identityColsOf(m.meta).filter(set.contains).foreach(c =>
+      throw new IllegalArgumentException(
+        s"$tableName.$c is GENERATED ALWAYS AS IDENTITY — UPDATE SET " +
+          "cannot modify it"))
+    val affectedPaths =
+      if (m.entries.isEmpty) Set.empty[String]
+      else scanFiles(spark, Versioned.scanOf(tableDir, m, m.entries),
+        keepMeta = true)
+        .filter(cond)
+        .select(col(FpCol).as("__fp")).distinct()
+        .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    val baseP = Paths.get(tableDir)
+    val (affected, untouched) = m.entries.partition(e =>
+      affectedPaths.contains(baseP.resolve(e.path).toString))
+    val parts = partitionSpecOf(m.meta, m.files)
+    def applied(df: DataFrame): DataFrame = {
+      // row-tracked rewrites carry the materialized id through the SET
+      // projection — UPDATE changes a row's content, not its identity
+      val keep =
+        if (df.columns.contains(PhysRowIdCol)) Seq(col(PhysRowIdCol))
+        else Seq.empty
+      df.select(schema.fields.map { f =>
+        set.get(f.name) match {
+          case Some(e) =>
+            when(cond, expr(e).cast(f.dataType))
               .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }.toSeq: _*)
-        writeTable(spark, lh, tableName, out,
-          partitionBy = currentPartitioning(lh, tableName))
+          case None => col(f.name)
+        }
+      }.toSeq ++ keep: _*)
     }
+    // with CDF the affected scan feeds THREE plans (the rewrite, the
+    // pre-image filter, and the post-image projection of the same
+    // matched rows) — persist it so the affected files read once
+    val shareScan = cdfEnabled(m.meta) && affected.nonEmpty
+    val affectedScan: Option[DataFrame] =
+      (if (affected.isEmpty) None
+      else if (m.meta.contains(Versioned.RowTrackingKey))
+        Some(withRowIds(spark, tableDir, m, affected)
+          .withColumnRenamed(RowIdColName, PhysRowIdCol))
+      else Some(scanSpec(spark, Versioned.scanOf(tableDir, m, affected))))
+        .map(df => if (shareScan) df.persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df)
+    // everything after the persist — including the CHECK-constraint
+    // validation, which can throw — sits inside the unpersist guard
+    val commit = try {
+      val rewritten = affectedScan.map(applied)
+      rewritten.foreach(r =>
+        enforceChecks(r, checkConstraintsOf(m.meta), s"$tableName: update"))
+      val changes: Option[DataFrame] =
+        if (!cdfEnabled(m.meta) || affected.isEmpty) None
+        else affectedScan.map { sc =>
+          val matched = sc.filter(cond).drop(PhysRowIdCol)
+          matched.withColumn("_change_type", lit("update_preimage"))
+            .unionByName(applied(matched)
+              .withColumn("_change_type", lit("update_postimage")))
+        }
+      val sw = new StagedWrite(spark, bloomColsOf(m))
+      Versioned.commitFiles(tableDir, m.schemaJson,
+        inherit = untouched, expectedBase = Some(b),
+        collectStats = sw.collect,
+        meta = m.meta,
+        beforeMarker = (v, _, cid) => changes.foreach(
+          _.write.mode(SaveMode.Overwrite)
+            .parquet(cdfDir(tableDir, v, cid).toString)),
+        op = "UPDATE") { target =>
+        rewritten.foreach { r =>
+          sw.write(toPhysical(r, schema), target, partitionBy = parts)
+        }
+      }
+    } finally { if (shareScan) affectedScan.foreach(_.unpersist()) }
+    finishCommit(spark, lh, tableName, tableDir, commit,
+      schema.fieldNames.toSeq, parts)
   }
 
   /** Views write path — the reference defines `viewPath` (common.py:392) and

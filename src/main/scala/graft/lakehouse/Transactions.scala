@@ -150,10 +150,9 @@ object Txn {
     * touch the handle's registration state — callers do). */
   private def stageOne(h: Handle, spark: SparkSession, lh: LakehouseProps,
       tableName: String, tableDir: String, df: DataFrame): Long = {
-    val base = Versioned.latestVersion(tableDir)
     val ref: (Long, Seq[Versioned.FileEntry], String) => Unit =
       (v, _, cid) => writeRef(tableDir, v, cid, h.outcome)
-    val commit = base match {
+    val commit = Versioned.writeBase(tableDir) match {
       case None =>
         val sw = new TableIO.StagedWrite(spark)
         Versioned.commitFiles(tableDir, df.schema.json,
@@ -166,11 +165,7 @@ object Txn {
           beforeMarker = ref, op = "TXN APPEND", txn = Some(h.id)) { target =>
           sw.write(df, target)
         }
-      case Some(b) =>
-        val m = Versioned.readManifest(tableDir, b).getOrElse(
-          throw new IllegalArgumentException(
-            s"$tableName: transactions need a manifest-based table " +
-              "(legacy snapshot layouts upgrade on first ordinary write)"))
+      case Some((b, m)) =>
         require(!TableIO.cdfEnabled(m.meta),
           s"$tableName has the change feed enabled — feed consumers read " +
             "version-contiguous sidecars; not supported inside transactions")

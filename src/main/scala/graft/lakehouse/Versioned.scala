@@ -30,18 +30,17 @@ import scala.jdk.CollectionConverters._
   *                               [[CheckpointInterval]] versions
   *   T/_commit_N                 commit marker — version N exists iff its
   *                               marker does; latest = max marker
+  *   T/_cdf_N_<commitId>/        version N's change-data sidecar, owned by
+  *                               the commit whose manifest names the id
   *   T/.staging-<uuid>/          in-flight writers' scratch (hidden from
   *                               readers); files move to the root pre-commit
-  *   T/_v1/ ...                  legacy whole-snapshot versions (round-2
-  *                               layout) — still readable, never written
-  *   T/_LATEST                   legacy/debug pointer cache (markers win)
   * }}}
   *
   * Guarantees:
   *  - readers resolve the latest committed version once, then scan an
   *    immutable file list — a concurrent commit never shows them a
   *    half-written or half-deleted table;
-  *  - a writer stages new files into its own `data-<uuid>/` pool, so two
+  *  - a writer stages new files into its own `.staging-<uuid>/` dir, so two
   *    writers can never interleave files;
   *  - version claim = atomic hard-link of the manifest into `_manifest_N`
   *    (`Files.createLink` fails with EEXIST if N is taken — the same
@@ -70,12 +69,12 @@ import scala.jdk.CollectionConverters._
   * cleanup. A 100 TB table at 128 MB files has a ~1M-line manifest (tens of
   * MB) — same order as a Delta checkpoint file.
   *
-  * Pre-protocol directories (parquet files directly under `T/`) stay
-  * readable: resolution falls back to `T/` itself.
+  * Pre-protocol directories (parquet files under `T/`, no markers) stay
+  * readable — resolution falls back to `T/` itself — but no writer builds
+  * on one ([[writeBase]]); `TableIO.convertToVersioned` adopts it.
   */
 object Versioned {
 
-  val PointerName = "_LATEST"
   val MarkerPrefix = "_commit_"
   val ManifestPrefix = "_manifest_"
   val StagingPrefix = ".staging-"
@@ -105,8 +104,7 @@ object Versioned {
   /** One data file in a manifest: its path (relative to the table dir) and
     * optional per-file column statistics (single-line JSON:
     * `{"__rows":"n", "col":[minStr, maxStr, nullCountStr], ...,
-    * "__bloom_col":"<base64>"}`; min/max are null for all-null columns;
-    * 2-element arrays from older manifests still parse) — the
+    * "__bloom_col":"<base64>"}`; min/max are null for all-null columns) — the
     * data-skipping metadata Delta keeps per add-file. Serialized as
     * `path` or `path<TAB>statsJson` (stats JSON escapes control chars, so
     * neither raw tabs nor newlines can corrupt the line format). */
@@ -135,7 +133,7 @@ object Versioned {
 
   /** What a reader should scan. */
   sealed trait ReadSpec
-  /** Legacy whole-snapshot version dir, or a pre-protocol table dir. */
+  /** A pre-protocol table dir: plain parquet, no commit markers. */
   final case class ScanDir(path: String) extends ReadSpec
   /** Manifest-based version: explicit file list under `base`. `dv` maps a
     * data-file path to its deletion-vector sidecar (same path convention as
@@ -174,7 +172,7 @@ object Versioned {
 
   /** The scan spec for a subset of a manifest's entries, deletion vectors
     * attached — every logical read of manifest data MUST come through here
-    * (or [[specFor]]) or DV-deleted rows would resurrect. */
+    * (or [[readSpec]]) or DV-deleted rows would resurrect. */
   def scanOf(tableDir: String, m: Manifest,
       entries: Seq[FileEntry]): ScanFiles =
     ScanFiles(tableDir, m.schemaJson, entries.map(_.path), dvOf(entries))
@@ -190,9 +188,6 @@ object Versioned {
     * of the table is stale. Re-read and retry (Delta MERGE semantics). */
   final class ConcurrentWriteException(msg: String) extends RuntimeException(msg)
 
-  private def pointer(tableDir: Path): Path = tableDir.resolve(PointerName)
-  private def versionDir(tableDir: Path, v: Long): Path =
-    tableDir.resolve(s"_v$v")
   private def marker(tableDir: Path, v: Long): Path =
     tableDir.resolve(s"$MarkerPrefix$v")
   private def manifestPath(tableDir: Path, v: Long): Path =
@@ -217,27 +212,17 @@ object Versioned {
     else None
   }
 
-  /** Current committed version: the max commit marker; legacy pointer-file
-    * tables (pre-marker layout) fall back to the pointer value. */
+  /** Current committed version: the max visible commit marker. */
   def latestVersion(tableDir: String): Option[Long] = {
-    val dir = Paths.get(tableDir)
-    val names = listNames(dir)
+    val names = listNames(Paths.get(tableDir))
     val markers = names.flatMap(numericSuffix(_, MarkerPrefix))
-    if (markers.nonEmpty) {
-      // transaction-pending versions are not visible until their outcome
-      // decides; the common case (no refs) costs nothing beyond the name
-      // scan already done
-      if (!names.exists(_.startsWith(TxnRefPrefix))) Some(markers.max)
-      else markers.sorted(Ordering[Long].reverse)
-        .find(v => txnVisible(tableDir, v))
-    }
-    else {
-      val p = pointer(dir)
-      if (!Files.isRegularFile(p)) None
-      else scala.util.Try(
-        new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong
-      ).toOption
-    }
+    if (markers.isEmpty) None
+    // transaction-pending versions are not visible until their outcome
+    // decides; the common case (no refs) costs nothing beyond the name
+    // scan already done
+    else if (!names.exists(_.startsWith(TxnRefPrefix))) Some(markers.max)
+    else markers.sorted(Ordering[Long].reverse)
+      .find(v => txnVisible(tableDir, v))
   }
 
   /** All committed (retained) versions, ascending. */
@@ -285,15 +270,10 @@ object Versioned {
         Files.getLastModifiedTime(marker(Paths.get(tableDir), v)).toMillis
       ).toOption)
 
-  /** True iff `version` was actually committed (its marker exists, or a
-    * legacy pointer names it) — an orphaned/in-flight manifest or `_vN`
-    * directory is NOT a committed snapshot. */
-  def isCommitted(tableDir: String, version: Long): Boolean = {
-    val dir = Paths.get(tableDir)
-    Files.exists(marker(dir, version)) ||
-      (listNames(dir).forall(!_.startsWith(MarkerPrefix)) &&
-        latestVersion(tableDir).contains(version))
-  }
+  /** True iff `version` was actually committed (its marker exists) — an
+    * orphaned/in-flight manifest claim is NOT a committed snapshot. */
+  def isCommitted(tableDir: String, version: Long): Boolean =
+    Files.exists(marker(Paths.get(tableDir), version))
 
   /** Meta key marking a DELTA manifest: the version whose (resolved) file
     * list this manifest's removals/additions apply to. A 100 TB table's
@@ -526,17 +506,53 @@ object Versioned {
       }
     }
 
-  /** The scan spec for a SPECIFIC committed version. */
-  def specFor(tableDir: String, v: Long): ReadSpec =
-    readManifest(tableDir, v) match {
-      case Some(m) => scanOf(tableDir, m, m.entries)
-      case None => ScanDir(versionDir(Paths.get(tableDir), v).toString)
+  /** The manifest of committed version `v`. Every committed version has
+    * one, so a missing manifest is corrupt metadata and fails loudly. */
+  def committedManifest(tableDir: String, v: Long): Manifest =
+    readManifest(tableDir, v).getOrElse(throw new IllegalStateException(
+      s"$tableDir: version $v is committed but its manifest is missing — " +
+        "the table's metadata is corrupt"))
+
+  /** Which manifest a writer may build on — the one rule every writer that
+    * inherits files or meta from the current version resolves its base by:
+    *  - committed versions: the latest visible one and its manifest;
+    *  - no marker and no data file: a new table (None);
+    *  - data files but no marker: a pre-protocol directory. Building on it
+    *    would commit only the new rows and hide the old ones from every
+    *    read (and let vacuum delete them), so it fails loudly until
+    *    `TableIO.convertToVersioned` adopts the files in place.
+    * A `_manifest_N` claim also rules out "pre-protocol": a crashed first
+    * commit claims before it moves its staged files to the root. */
+  def writeBase(tableDir: String): Option[(Long, Manifest)] =
+    latestVersion(tableDir) match {
+      case Some(v) => Some(v -> committedManifest(tableDir, v))
+      case None =>
+        val dir = Paths.get(tableDir)
+        val names = listNames(dir)
+        val claimed = names.exists(n => numericSuffix(n, MarkerPrefix)
+          .orElse(numericSuffix(n, ManifestPrefix)).isDefined)
+        // data = what a plain parquet read of the dir scans
+        def holdsParquet(p: Path): Boolean = {
+          val s = Files.walk(p)
+          try s.anyMatch(q => q.getFileName.toString.endsWith(".parquet") &&
+            Files.isRegularFile(q))
+          finally s.close()
+        }
+        if (!claimed && names.exists(n => !n.startsWith("_") &&
+            !n.startsWith(".") && holdsParquet(dir.resolve(n))))
+          throw new IllegalArgumentException(
+            s"$tableDir holds parquet data but no committed version — a " +
+              "pre-protocol directory; adopt it with " +
+              "TableIO.convertToVersioned before writing to it")
+        None
     }
 
   /** The scan spec for the latest committed version (or the directory
     * itself for pre-protocol layouts). */
   def readSpec(tableDir: String): ReadSpec = latestVersion(tableDir) match {
-    case Some(v) => specFor(tableDir, v)
+    case Some(v) =>
+      val m = committedManifest(tableDir, v)
+      scanOf(tableDir, m, m.entries)
     case None => ScanDir(tableDir)
   }
 
@@ -768,11 +784,11 @@ object Versioned {
         ((schemaJson +: metaLines) ++ contentLines).mkString("\n")
           .getBytes(StandardCharsets.UTF_8))
       try {
-        // allocate past every existing version number — committed, legacy,
-        // or orphaned from a crashed writer — so an orphan never wedges us
+        // allocate past every existing version number — committed or
+        // orphaned from a crashed writer — so an orphan never wedges us
         def allocated: Long = (0L +: listNames(dir).flatMap(n =>
-          numericSuffix(n, MarkerPrefix) orElse numericSuffix(n, ManifestPrefix)
-            orElse numericSuffix(n, "_v"))).max
+          numericSuffix(n, MarkerPrefix) orElse
+            numericSuffix(n, ManifestPrefix))).max
         var v = expectedBase match {
           case Some(base) =>
             val latest = latestVersion(tableDir).getOrElse(0L)
@@ -807,11 +823,10 @@ object Versioned {
                 def mt(p: Path): Long =
                   scala.util.Try(Files.getLastModifiedTime(p).toMillis)
                     .getOrElse(Long.MaxValue)
-                // every sidecar belonging to v — the legacy `_cdf_v`
-                // form and commit-owned `_cdf_v_<id>` dirs — counts as a
-                // sign of life
+                // every commit-owned sidecar `_cdf_v_<id>` of v counts as
+                // a sign of life
                 val cdfNewest = listNames(dir)
-                  .filter(n => n == s"_cdf_$v" || n.startsWith(s"_cdf_${v}_"))
+                  .filter(_.startsWith(s"_cdf_${v}_"))
                   .map { n =>
                     val c = dir.resolve(n)
                     scala.util.Try {
@@ -843,13 +858,7 @@ object Versioned {
                     case Some(base) => throw conflict(tableDir, base, v)
                     case None => v += 1
                   }
-                } else {
-                  if (movedAside) reclaimBackup = Some(v -> backup)
-                  // the crashed writer's sidecar would block the reclaimed
-                  // number's beforeMarker write
-                  try deleteRecursively(dir.resolve(s"_cdf_$v"))
-                  catch { case _: Exception => () }
-                }
+                } else if (movedAside) reclaimBackup = Some(v -> backup)
               } else if (Files.exists(marker(dir, v)) && txnAborted(dir, v)) {
                 // a decided-aborted transaction occupies this number: it is
                 // invisible and never inherited from, so allocating past it
@@ -904,17 +913,21 @@ object Versioned {
             throw conflict(tableDir, expectedBase.getOrElse(0L), v)
         } catch {
           case e: Exception =>
-            // abort cleanly: un-claim (no marker yet -> never committed)
-            // and clear any partially-written version sidecar, or the
-            // reclaimed number would wedge the next writer's sidecar write.
-            // Only if the claim is still OURS — deleting a reclaimer's
-            // fresh manifest would repeat the very race being aborted.
+            // abort cleanly: un-claim (no marker yet -> never committed),
+            // then clear this commit's own sidecar and the files it moved
+            // to the root — without the claim, moved files would read as
+            // pre-protocol data on a table with no version yet. Only if the
+            // claim is still OURS — deleting a reclaimer's fresh manifest
+            // would repeat the very race being aborted.
             val stillOurs = scala.util.Try(
               Files.isSameFile(manifestPath(dir, v), tmp)).getOrElse(false)
             if (stillOurs) {
               Files.deleteIfExists(manifestPath(dir, v))
-              try deleteRecursively(dir.resolve(s"_cdf_$v"))
-              catch { case _: Exception => () }
+              try {
+                deleteRecursively(dir.resolve(s"_cdf_${v}_$commitId"))
+                stagedSrc.foreach(p => Files.deleteIfExists(
+                  dir.resolve(staging.relativize(p).toString)))
+              } catch { case _: Exception => () }
             }
             throw e
         }
@@ -951,13 +964,6 @@ object Versioned {
         // content is now provably dead weight
         reclaimBackup.foreach { case (_, b) =>
           scala.util.Try(Files.deleteIfExists(b)) }
-        // legacy/debug pointer cache — markers are authoritative
-        try {
-          val ptmp = dir.resolve(s".${PointerName}.tmp-${java.util.UUID.randomUUID()}")
-          Files.write(ptmp, v.toString.getBytes(StandardCharsets.UTF_8))
-          Files.move(ptmp, pointer(dir), StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        } catch { case _: Exception => () }
         try deleteRecursively(staging) catch { case _: Exception => () }
         // the full sweep re-parses kept manifests and walks the data tree
         // — O(table) metadata work a small append should not pay on every
@@ -1000,7 +1006,7 @@ object Versioned {
     * decision code as the real sweep (the deletions are routed through
     * one recorder), so the report cannot drift from the behavior: at
     * 100 TB nobody should run an irreversible sweep blind. Categories:
-    * `marker`/`manifest`/`snapshot`/`cdf`/`txnref` (dropped or orphaned
+    * `marker`/`manifest`/`cdf`/`txnref` (dropped or orphaned
     * protocol metadata), `scratch` (crashed writers' staging), `data`
     * (files no retained manifest references). One pass's prediction —
     * the real sweep converges over successive runs as delta-manifest
@@ -1064,8 +1070,7 @@ object Versioned {
     dropped.foreach { v =>
       zapFile(marker(dir, v), "marker")
       if (!chainDeps(v)) zapFile(manifestPath(dir, v), "manifest")
-      zapTree(versionDir(dir, v), "snapshot") // legacy snapshot dir
-      names.filter(n => n == s"_cdf_$v" || n.startsWith(s"_cdf_${v}_"))
+      names.filter(_.startsWith(s"_cdf_${v}_"))
         .foreach(n => zapTree(dir.resolve(n), "cdf")) // change sidecars
       names.filter(_.startsWith(s"$TxnRefPrefix${v}_"))
         .foreach(n => zapFile(dir.resolve(n), "txnref")) // txn refs
@@ -1084,32 +1089,20 @@ object Versioned {
         if (!young(p)) zapFile(p, "txnref")
       }
     }
-    // change-data sidecars of versions that never committed (crash between
-    // sidecar write and marker) age out like any orphan
-    names.filter(_.startsWith("_cdf_"))
-      .flatMap { n =>
-        // `_cdf_<v>` (legacy) or `_cdf_<v>_<commitId>` (commit-owned)
-        val suffix = n.drop("_cdf_".length)
-        val vPart = suffix.takeWhile(c => c >= '0' && c <= '9')
-        val idPart = suffix.drop(vPart.length) // "" or "_<id>"
-        numericSuffix("_cdf_" + vPart, "_cdf_")
-          .filter(_ => idPart.isEmpty || idPart.startsWith("_"))
-          .map(v => (n, v, idPart.drop(1)))
-      }
-      .filter { case (_, v, id) =>
-        // commit-owned sidecars orphan unless the COMMITTED version's
-        // manifest names their id; legacy ones orphan when no marker exists
-        if (!Files.exists(marker(dir, v))) true
-        else if (id.isEmpty) false
-        else !readManifest(dir.toString, v)
-          .exists(_.meta.get(CommitIdKey).contains(id))
-      }
-      .foreach { case (n, _, _) =>
-        val p = dir.resolve(n)
-        if (!young(p)) zapTree(p, "cdf")
-      }
-    // orphaned claims from crashed writers: manifest with no marker, or a
-    // legacy _vN dir with no marker — sweep once they cannot be in-flight.
+    // change-data sidecar `_cdf_<v>_<commitId>`: an orphan unless the
+    // COMMITTED manifest at v names its id (crashed or evicted commits'
+    // sidecars, and any `_cdf_` name without an id, age out)
+    names.filter(_.startsWith("_cdf_")).foreach { n =>
+      val (vPart, idPart) = n.drop("_cdf_".length).span(c => c >= '0' && c <= '9')
+      val live = idPart.length > 1 && idPart.head == '_' &&
+        numericSuffix("_cdf_" + vPart, "_cdf_").exists(v =>
+          Files.exists(marker(dir, v)) && readManifest(dir.toString, v)
+            .exists(_.meta.get(CommitIdKey).contains(idPart.tail)))
+      val p = dir.resolve(n)
+      if (!live && !young(p)) zapTree(p, "cdf")
+    }
+    // orphaned claims from crashed writers: manifest with no marker —
+    // sweep once they cannot be in-flight.
     // Chain deps are markerless by design once their version dropped: skip
     // them here until the survivors' chains move past them.
     names.flatMap(numericSuffix(_, ManifestPrefix))
@@ -1118,18 +1111,11 @@ object Versioned {
         val p = manifestPath(dir, v)
         if (!young(p)) zapFile(p, "manifest")
       }
-    names.flatMap(numericSuffix(_, "_v"))
-      .filter(v => !Files.exists(marker(dir, v)))
-      .foreach { v =>
-        val p = versionDir(dir, v)
-        if (Files.isDirectory(p) && !young(p)) zapTree(p, "snapshot")
-      }
     // data files — ONE rule for everything that is not protocol metadata:
     // a file referenced by a retained manifest stays; anything else (files
-    // removed by later versions, pre-protocol loose files, legacy hive
-    // col=value dirs from before the protocol, round-2 `data-*` pools,
-    // crashed writers' leftovers) is deleted once old enough that no
-    // in-flight writer or slow reader can still be using it
+    // removed by later versions, a pre-protocol dir's files once an
+    // overwrite replaced them, crashed writers' leftovers) is deleted once
+    // old enough that no in-flight writer or slow reader can still use it
     // deletion-vector sidecars are referenced THROUGH entry stats, not the
     // file list — they must survive exactly as long as an entry points at
     // them (a swept sidecar would silently resurrect its deleted rows)
@@ -1161,8 +1147,7 @@ object Versioned {
       .toSet
     names.foreach { n =>
       val p = dir.resolve(n)
-      if (n.startsWith(StagingPrefix) || n.startsWith(".manifest.") ||
-          n.startsWith(s".$PointerName.tmp")) {
+      if (n.startsWith(StagingPrefix) || n.startsWith(".manifest.")) {
         // crashed writers' scratch — never referenced once orphaned. Age
         // by the NEWEST mtime in the subtree: a long-running write keeps
         // touching deep task files while the staging ROOT's mtime stays at

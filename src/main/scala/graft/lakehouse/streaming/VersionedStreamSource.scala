@@ -140,17 +140,12 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
     val batch = StreamBridge.asBatch(spark, data)
     var attempt = 0
     while (true) {
-      val base = Versioned.latestVersion(tableDir)
-      val m = base.flatMap(Versioned.readManifest(tableDir, _))
-      if (base.nonEmpty && m.isEmpty)
-        throw new IllegalStateException(
-          s"$tableDir: the streaming sink needs a manifest-based table " +
-            "(legacy snapshot layouts carry no txn metadata)")
+      val base = Versioned.writeBase(tableDir)
       // exactly-once: a replayed (crash-recovered) batch is already in the
       // committed watermark — skip it
-      if (m.exists(_.meta.get(txnKey).exists(_.toLong >= batchId))) return
+      if (base.exists(_._2.meta.get(txnKey).exists(_.toLong >= batchId))) return
       try {
-        m match {
+        base match {
           case None =>
             // pinned to base 0: a concurrent creator forces a retry as a
             // normal append instead of silently superseding its commit
@@ -162,7 +157,7 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
               op = "STREAM APPEND") { target =>
               sw.write(batch, target)
             }
-          case Some(man) =>
+          case Some((b, man)) =>
             TableIO.enforceChecks(batch,
               TableIO.checkConstraintsOf(man.meta), s"$tableDir: sink batch")
             // align to the table schema by name (same evolution rule as
@@ -178,7 +173,7 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
             // like the batch append path — a renamed table's stream must
             // keep writing the PHYSICAL names
             val evolvedM = TableIO.alignMapping(evolved, oldSchema,
-              man.meta, base.getOrElse(0L))
+              man.meta, b)
             val aligned =
               oldEmpty.unionByName(batch, allowMissingColumns = true)
             val parts =
@@ -186,7 +181,7 @@ class VersionedTableSink(spark: org.apache.spark.sql.SparkSession,
               else TableIO.partitionSpecOf(man.meta, man.files)
             val sw = new TableIO.StagedWrite(spark, TableIO.bloomColsOf(man))
             Versioned.commitFiles(tableDir, evolvedM.json,
-              inherit = man.entries, expectedBase = base,
+              inherit = man.entries, expectedBase = Some(b),
               collectStats = sw.collect,
               meta = man.meta + (txnKey -> batchId.toString),
               op = "STREAM APPEND") { target =>
@@ -221,9 +216,8 @@ class VersionedTableSource(spark: org.apache.spark.sql.SparkSession,
   private def manifestOf(v: Long): Versioned.Manifest =
     Versioned.readManifest(tableDir, v).getOrElse(
       throw new IllegalStateException(
-        s"$tableDir: manifest for version $v is unavailable (legacy " +
-          "snapshot layout, or swept by retention — raise " +
-          "Versioned.RetainAgeMs for slow/paused streams)"))
+        s"$tableDir: manifest for version $v is unavailable (swept by " +
+          "retention — raise Versioned.RetainAgeMs for slow/paused streams)"))
 
   /** The newest version this source has handed the engine (offered via
     * [[getOffset]] or processed via [[getBatch]]) — the base the trigger

@@ -305,6 +305,32 @@ class FileLevelCommitSpec extends SparkSuite {
     TableIO.dropTable(spark, lh, "c1")
   }
 
+  test("a commit that fails before its marker leaves no change-feed sidecar") {
+    TableIO.writeTable(spark, lh, "cab", Seq((1, "a")).toDF("k", "s"))
+    val tdir = Catalog.tablePath(lh, "cab")
+    val base = Versioned.latestVersion(tdir).get
+    val m = Versioned.readManifest(tdir, base).get
+    intercept[IllegalStateException] {
+      Versioned.commitFiles(tdir, m.schemaJson, inherit = m.entries,
+        expectedBase = Some(base),
+        beforeMarker = (v, _, cid) => {
+          Seq((2, "b")).toDF("k", "s").write
+            .parquet(Paths.get(tdir, s"_cdf_${v}_$cid").toString)
+          throw new IllegalStateException("sidecar job failed")
+        }) { target =>
+        Seq((2, "b")).toDF("k", "s").write.mode("append").parquet(target)
+      }
+    }
+    val names = new java.io.File(tdir).listFiles().map(_.getName)
+    assert(!names.exists(_.startsWith("_cdf_")), names.mkString(","))
+    // ...nor the data file it had moved to the root
+    assert(names.count(_.endsWith(".parquet")) == m.files.size,
+      names.mkString(","))
+    assert(Versioned.latestVersion(tdir).contains(base))
+    assert(TableIO.selectTable(spark, lh, "cab").count() == 1)
+    TableIO.dropTable(spark, lh, "cab")
+  }
+
   test("age-based retention: two fast overwrites cannot sweep a version a " +
       "slow reader still holds") {
     TableIO.writeTable(spark, lh, "r1", Seq((1, "v1")).toDF("k", "s")) // v1

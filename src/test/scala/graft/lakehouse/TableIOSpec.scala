@@ -94,24 +94,19 @@ class TableIOSpec extends SparkSuite {
     val v1 = Seq((1, "a")).toDF("k", "s")
     TableIO.writeTable(spark, lh, "trace", v1)
     val tdir = Catalog.tablePath(lh, "trace")
-    // simulate writers that died mid-commit: a legacy partial _v2 AND an
-    // orphaned manifest claim at 3 with no marker
-    val orphan = java.nio.file.Paths.get(tdir, "_v2")
-    java.nio.file.Files.createDirectories(orphan)
-    java.nio.file.Files.write(orphan.resolve("part-junk.parquet"),
-      Array[Byte](1, 2, 3))
-    java.nio.file.Files.write(java.nio.file.Paths.get(tdir, "_manifest_3"),
-      "{}\n".getBytes)
-    // the next commit allocates PAST both orphans instead of colliding
+    // simulate a writer that died mid-commit: an orphaned manifest claim
+    // at 3 with no marker
+    val orphan = java.nio.file.Paths.get(tdir, "_manifest_3")
+    java.nio.file.Files.write(orphan, "{}\n".getBytes)
+    // the next commit allocates PAST the orphan instead of colliding
     TableIO.writeTable(spark, lh, "trace", Seq((2, "b"), (3, "c")).toDF("k", "s"))
     assert(Versioned.latestVersion(tdir).contains(4L))
     assert(TableIO.selectTable(spark, lh, "trace").count() == 2)
-    // neither orphan is a committed version
-    assert(!Versioned.isCommitted(tdir, 2L) && !Versioned.isCommitted(tdir, 3L))
-    // and both are swept once they cannot be in-flight any more
+    // the orphan is not a committed version
+    assert(!Versioned.isCommitted(tdir, 3L))
+    // and it is swept once it cannot be in-flight any more
     Versioned.vacuum(tdir, retainAgeMs = 0L)
     assert(!java.nio.file.Files.exists(orphan))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(tdir, "_manifest_3")))
     assert(TableIO.selectTable(spark, lh, "trace").count() == 2)
     TableIO.dropTable(spark, lh, "trace")
   }
@@ -430,6 +425,65 @@ class TableIOSpec extends SparkSuite {
     }
     assert(ex.getMessage.contains("IDENTITY"), ex.getMessage)
     TableIO.dropTable(spark, lh, "idu1")
+  }
+
+  test("appending to a pre-protocol directory fails loudly and keeps its rows") {
+    val dir = Catalog.tablePath(lh, "tpreapp")
+    Seq((1, "a"), (2, "b")).toDF("k", "s").write.parquet(dir)
+    val ex = intercept[IllegalArgumentException] {
+      TableIO.appendTable(spark, lh, "tpreapp", Seq((3, "c")).toDF("k", "s"))
+    }
+    assert(ex.getMessage.contains("convertToVersioned"), ex.getMessage)
+    // the base-inheriting writers share the one rule
+    intercept[IllegalArgumentException] {
+      TableIO.mergeTable(spark, lh, "tpreapp", Seq((1, "z")).toDF("k", "s"),
+        Seq("k"))
+    }
+    intercept[IllegalArgumentException] {
+      TableIO.deleteFromTable(spark, lh, "tpreapp", "k = 1")
+    }
+    assert(Versioned.latestVersion(dir).isEmpty)
+    assert(TableIO.selectTable(spark, lh, "tpreapp").as[(Int, String)]
+      .collect().toSet == Set((1, "a"), (2, "b")))
+    // once adopted in place, the same append lands beside the old rows
+    TableIO.convertToVersioned(spark, lh, "tpreapp")
+    TableIO.appendTable(spark, lh, "tpreapp", Seq((3, "c")).toDF("k", "s"))
+    assert(TableIO.selectTable(spark, lh, "tpreapp").as[(Int, String)]
+      .collect().toSet == Set((1, "a"), (2, "b"), (3, "c")))
+    TableIO.dropTable(spark, lh, "tpreapp")
+  }
+
+  test("a crashed first commit's moved files are not read as pre-protocol") {
+    val dir = Catalog.tablePath(lh, "tcrash1")
+    // the claim came first, then the staged files moved to the root; the
+    // marker never landed
+    Seq((1, "a")).toDF("k", "s").write.parquet(dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_manifest_1"),
+      "{}\n".getBytes)
+    assert(Versioned.writeBase(dir).isEmpty)
+    TableIO.dropTable(spark, lh, "tcrash1")
+  }
+
+  test("every writer leaves only the one on-disk layout") {
+    val name = "tlayout"
+    val dir = Catalog.tablePath(lh, name)
+    TableIO.writeTable(spark, lh, name, Seq((1, "a"), (2, "b")).toDF("k", "s"))
+    TableIO.enableChangeFeed(spark, lh, name)
+    TableIO.appendTable(spark, lh, name, Seq((3, "c")).toDF("k", "s"))
+    TableIO.mergeTable(spark, lh, name, Seq((1, "A"), (4, "d")).toDF("k", "s"),
+      Seq("k"))
+    TableIO.deleteFromTable(spark, lh, name, "k = 2")
+    TableIO.compactTable(spark, lh, name)
+    Versioned.vacuum(dir, retainAgeMs = 0L)
+    assert(TableIO.selectTable(spark, lh, name).as[(Int, String)]
+      .collect().toSet == Set((1, "A"), (3, "c"), (4, "d")))
+    val names = new java.io.File(dir).listFiles().map(_.getName).toSeq
+    val protocol = "_commit_\\d+|_manifest_\\d+|_cdf_\\d+_[0-9a-f]+"
+    val odd = names.filterNot(n => n.matches(protocol) ||
+      (n.startsWith("part-") && n.endsWith(".parquet")))
+    assert(odd.isEmpty, s"unexpected entries: $odd")
+    assert(names.exists(_.startsWith("_cdf_")), names)
+    TableIO.dropTable(spark, lh, name)
   }
 
   test("pre-protocol directories stay readable; legacy files swept later") {

@@ -105,24 +105,13 @@ class WriteStatsSpec extends SparkSuite {
     check(df.coalesce(1))
   }
 
-  test("targetStagedFileBytes coalesces staged files; default off keeps " +
-      "upstream partitioning; stats stay identical") {
+  test("staged writes keep upstream partitioning; stats stay identical") {
     val df = spark.range(0, 10000, 1, 8)
       .select(col("id"), concat(lit("v"), col("id")).as("s"))
-    def stagedCount(conf: Option[String]): Int = {
-      conf.foreach(v => spark.conf.set(TableIO.TargetStagedFileBytesKey, v))
-      try {
-        val dir = Files.createTempDirectory("ws_size")
-          .resolve("stage").toString
-        val got = TableIO.writeStagedWithStats(df, dir)
-        assert(got != null)
-        assert(got == TableIO.collectFileStats(spark)(dir))
-        got.size
-      } finally conf.foreach(_ =>
-        spark.conf.unset(TableIO.TargetStagedFileBytesKey))
-    }
-    assert(stagedCount(None) == 8, "default off: upstream partitioning")
-    assert(stagedCount(Some((64L * 1024 * 1024).toString)) == 1,
-      "a tiny frame under a 64 MB target coalesces to one file")
+    val dir = Files.createTempDirectory("ws_size").resolve("stage").toString
+    val got = TableIO.writeStagedWithStats(df, dir)
+    assert(got != null)
+    assert(got == TableIO.collectFileStats(spark)(dir))
+    assert(got.size == 8, "one staged file per upstream partition")
   }
 }
